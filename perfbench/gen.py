@@ -9,9 +9,8 @@ Layout under that directory:
 * ``tables/<name>.parquet`` - TPC-H-ish star schema plus ``events``,
   ``documents`` and ``embeddings``, with the column names and types of the
   repo's test data; the ``registry_mix`` input.
-* ``scan_full/*.tsv`` - lineitem, orders, customer and events as TSV.
-* ``scan_sampled/*.tsv`` - lineitem and orders above the sampled
-  workload's ``max_rows``, plus two hostile files: ragged rows, and a UTF-8
+* ``scan_sampled/*.tsv`` - lineitem and orders, each several times the
+  sampled workload's ``max_rows``, plus two hostile files: ragged rows, and a UTF-8
   BOM with CRLF line ends, quoted delimiters and an all-empty column. An
   empty file is left out: the CLI reports it with ``n_rows_checked = -1``
   and one unnamed column. A header-only file is left out for run length
@@ -25,7 +24,7 @@ missing, "" is empty and distinct counts the rest; typed (double/timestamp)
 columns fold "" into missing and report no empties.
 
 Run ``python3 perfbench/gen.py DIR --seed N [--workload W]`` to write a set
-by hand; ``PERFBENCH_TINY=1`` shrinks every table for the self-tests.
+by hand; ``PERFBENCH_TINY=1`` shrinks the registry tables for the self-tests.
 """
 
 from __future__ import annotations
@@ -53,29 +52,24 @@ P_ADJ = ["blue", "hot", "large", "new", "old", "red", "small", "cold"]
 P_NOUN = ["anvil", "bolt", "gear", "gizmo", "plate", "ring", "widget", "nut"]
 REGIONS = ["AFRICA", "AMERICA", "ASIA", "EUROPE", "MIDDLE EAST"]
 
-# Row counts. ``tables`` feed the registry queries; the scan folders get
-# their own fact tables. The sampled folder's two big tables sit above the
-# sampled workload's max_rows (2000) by enough that the seeded Bernoulli
-# fraction stays below 1, so the sample is a real one.
+# Row counts. ``tables`` feed the registry queries; the scan folder gets its
+# own fact tables. Its two big tables hold 8x the sampled workload's
+# max_rows (1000), so the seeded Bernoulli fraction ``exact_random_sample``
+# picks is about 0.3 and the sample is a real one (checked by the
+# self-tests). A table of 1-3.5x max_rows gets a fraction of ~1, which
+# reduces the sample to a ``limit``.
 SIZES = {
     "tables": {"supplier": 10, "part": 200, "customer": 150, "orders": 1500,
                "lineitem": 6000, "events": 1000, "documents": 500,
                "embeddings": 500},
-    "scan_full": {"supplier": 20, "part": 400, "customer": 200, "orders": 2000,
-                  "lineitem": 8000, "events": 1200},
     "scan_sampled": {"supplier": 20, "part": 400, "customer": 300,
-                     "orders": 3000, "lineitem": 3500, "events": 1000},
+                     "orders": 8000, "lineitem": 8000, "events": 1000},
 }
-# PERFBENCH_TINY=1: the self-tests' small inputs
-TINY_SIZES = {
-    "tables": {"supplier": 10, "part": 50, "customer": 50, "orders": 150,
+# PERFBENCH_TINY=1: the self-tests' small registry tables; the scan folder
+# keeps its size so that its sample stays a real one
+TINY_TABLES = {"supplier": 10, "part": 50, "customer": 50, "orders": 150,
                "lineitem": 500, "events": 100, "documents": 100,
-               "embeddings": 100},
-    "scan_full": {"supplier": 5, "part": 20, "customer": 40, "orders": 100,
-                  "lineitem": 300, "events": 100},
-    "scan_sampled": {"supplier": 5, "part": 20, "customer": 40,
-                     "orders": 100, "lineitem": 300, "events": 100},
-}
+               "embeddings": 100}
 EPOCH_1995 = dt.date(1995, 1, 1)
 EVENTS_T0 = dt.datetime(2024, 1, 1)
 
@@ -320,22 +314,18 @@ def _hostile(folder: _Folder, rs: np.random.RandomState) -> None:
                  eol="\r\n", bom=True)
 
 
-FULL_TABLES = ("customer", "events", "lineitem", "orders")
-# Columns the scan folders keep. A scan runs ~25 Spark jobs per file plus a
+# Columns the scan folder keeps. A scan runs ~25 Spark jobs per file plus a
 # few per column, and a run must stay near 10 s warm; these keep each
 # table's key, its numeric, date and categorical columns, and every column
 # with injected missing or empty cells.
 SCAN_COLUMNS = {
-    "customer": ("c_custkey", "c_nationkey", "c_acctbal", "c_mktsegment"),
-    "events": ("event_id", "ts", "event_type", "value"),
     "lineitem": ("l_orderkey", "l_partkey", "l_quantity", "l_extendedprice",
                  "l_discount", "l_tax", "l_returnflag", "l_shipdate"),
     "orders": ("o_orderkey", "o_orderstatus", "o_totalprice", "o_orderdate",
                "o_orderpriority"),
 }
-# missing / empty rates injected into a few columns of the scan folders
+# missing / empty rates injected into a few columns of the scan folder
 NA_RATES = {
-    "customer": {"c_acctbal": (0.02, 0.01), "c_mktsegment": (0.01, 0.02)},
     "orders": {"o_orderpriority": (0.0, 0.03), "o_totalprice": (0.01, 0.0)},
     "lineitem": {"l_tax": (0.01, 0.01)},
 }
@@ -362,14 +352,6 @@ def generate(root: str, seed: int, workloads: tuple[str, ...]) -> dict:
             name: os.path.getsize(os.path.join(tdir, f"{name}.parquet"))
             for name in sorted(tables)
         }
-    if "scan_full" in workloads:
-        rs = np.random.RandomState(seed + 1)
-        tables = _tpch(rs, SIZES["scan_full"])
-        folder = _Folder(os.path.join(root, "scan_full"))
-        for name in FULL_TABLES:
-            folder.write_table(f"{name}.tsv", _scan_columns(tables, name),
-                               NA_RATES.get(name), rs)
-        manifest["scan_full"] = folder.files
     if "scan_sampled" in workloads:
         rs = np.random.RandomState(seed + 2)
         tables = _tpch(rs, SIZES["scan_sampled"])
@@ -389,13 +371,12 @@ def main() -> None:
     ap.add_argument("root")
     ap.add_argument("--seed", type=int, default=1)
     ap.add_argument("--workload", action="append",
-                    choices=["scan_full", "scan_sampled", "registry_mix"],
-                    help="repeatable; default: all three")
+                    choices=["scan_sampled", "registry_mix"],
+                    help="repeatable; default: both")
     args = ap.parse_args()
     if os.environ.get("PERFBENCH_TINY") == "1":
-        SIZES.update(TINY_SIZES)
-    generate(args.root, args.seed, tuple(args.workload or
-                                         ("scan_full", "scan_sampled", "registry_mix")))
+        SIZES["tables"] = TINY_TABLES
+    generate(args.root, args.seed, tuple(args.workload or ("scan_sampled", "registry_mix")))
 
 
 if __name__ == "__main__":

@@ -1,7 +1,8 @@
 """Self-tests for the benchmark: ``python3 -m pytest perfbench -q``.
 
-The smoke runs use ``PERFBENCH_TINY=1`` (a small folder and a 2-query mix)
-and take about half a minute each.
+The smoke runs use ``PERFBENCH_TINY=1`` (small registry tables and a 2-query
+mix; the scan folder keeps its ~0.7 MB so that its sample stays a real one)
+and take under a minute each.
 """
 
 from __future__ import annotations
@@ -76,8 +77,32 @@ def test_generator_is_deterministic(scratch):
     assert manifest["scan_sampled"]["hostile_bom_crlf.tsv"]["all_empty_columns"] == 1
 
 
+def test_sampled_tables_get_a_real_sample(scratch):
+    """The big tables take the Bernoulli path of ``exact_random_sample``,
+    not a bare ``limit`` (which a fraction of ~1 amounts to)."""
+    subprocess.run([sys.executable, os.path.join(HERE, "gen.py"), scratch, "--seed", "1",
+                    "--workload", "scan_sampled"], check=True)
+    with open(os.path.join(scratch, "manifest.json")) as fh:
+        files = json.load(fh)["scan_sampled"]
+    sys.path.insert(0, REPO)
+    from whiterrabbit_spark.sampling import exact_random_sample
+
+    class Frame:  # records the fraction the sampler asks for
+        def sample(self, fraction, seed):
+            self.fraction = fraction
+            return self
+
+        def limit(self, n):
+            return self
+
+    for name in ("lineitem_big.tsv", "orders_big.tsv"):
+        df = Frame()
+        exact_random_sample(df, bench.SAMPLED_MAX_ROWS, total_rows=files[name]["data_rows"])
+        assert df.fraction < 0.5, (name, df.fraction)
+
+
 def test_scan_smoke_prints_end_to_end_metrics():
-    result = _bench("scan_full", 0)
+    result = _bench("scan_sampled", 0)
     _assert_metrics(result, bench.END_TO_END)
     assert result["correct"] and result["failed"] == 0 and result["attempted"] >= 2
     assert all(v["value"] > 0 for v in result["metrics"].values())
@@ -88,19 +113,21 @@ def test_registry_smoke_prints_layer_metrics():
     _assert_metrics(result, bench.per_layer_units(bench.TINY_MIX))
     assert result["correct"]
     m = {k: v["value"] for k, v in result["metrics"].items()}
-    assert m["spark.jobs"] > 0
+    assert m["spark.jobs"] > 0 and m["failure_ratio"] == 0
     assert all(m[f"query.{q}.jobs"] > 0 for q in bench.TINY_MIX)
 
 
 def test_corrupted_result_hash_is_a_failure():
-    result = _bench("registry_mix", 0, PERFBENCH_CORRUPT="1")
+    result = _bench("registry_mix", 1, PERFBENCH_CORRUPT="1")
     assert not result["correct"]
     # the first query of each pass carries the corrupted hash
     assert result["failed"] == result["attempted"] // len(bench.TINY_MIX)
+    assert result["metrics"]["failure_ratio"]["value"] == pytest.approx(
+        result["failed"] / result["attempted"])
 
 
 def test_corrupted_report_truth_is_a_failure():
-    result = _bench("scan_full", 0, PERFBENCH_CORRUPT="1")
+    result = _bench("scan_sampled", 0, PERFBENCH_CORRUPT="1")
     assert not result["correct"]
     assert result["failed"] == result["attempted"]
 
@@ -121,7 +148,7 @@ def test_refuses_to_run_without_the_package(scratch):
                     ignore=shutil.ignore_patterns("_work", "_results", "__pycache__"))
     shutil.copy(os.path.join(REPO, "BENCHMARK.json"), scratch)
     p = subprocess.run(
-        [sys.executable, "perfbench/run.py", "--workload", "scan_full", "--seed", "1",
+        [sys.executable, "perfbench/run.py", "--workload", "scan_sampled", "--seed", "1",
          "--seconds", "1", "--trace", "0"],
         cwd=scratch, capture_output=True, text=True, timeout=60,
     )
