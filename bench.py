@@ -14,6 +14,7 @@ import json
 import os
 import time
 
+from whiterrabbit_spark.cache import cache_scope
 from whiterrabbit_spark.config import ScanConfig
 from whiterrabbit_spark.frequency import value_frequencies
 from whiterrabbit_spark.profile import profile_table
@@ -381,23 +382,20 @@ def main() -> None:
     for t in ("lineitem", "orders", "events", "documents", "embeddings"):
         read_parquet_table(spark, SF_DIR, t).limit(1).collect()
 
+    # Drop caches left by the phases above; from here each query's own
+    # scope releases its pins.
+    spark.catalog.clearCache()
+
     def measure(fn) -> float:
-        # Measurement-bug fix (r8, documented in OPTIMIZATION_r08.md):
-        # several operators persist() intermediates for within-query
-        # reuse, and Spark's CacheManager matches a LATER trial's
-        # identical logical plan against the leaked cache entry — so
-        # the second pass of a query was partially served from the
-        # first pass's cache instead of computing from parquet
-        # (measured: graph_triangles 1.3 s cache-served vs 5.6 s
-        # honest). Clearing the cache BEFORE the timer keeps every
-        # timed trial computing from the inputs; within-trial persists
-        # (the legitimate reuse) are unaffected.
-        spark.catalog.clearCache()
-        t0 = time.perf_counter()
-        df = fn(spark, SF_DIR)
-        n = df.count() if hasattr(df, "count") else len(df)
-        assert n >= 0
-        return round(time.perf_counter() - t0, 3)
+        # A pin left by one trial would serve a later trial's identical
+        # plan from cache (OPTIMIZATION_r08.md), so the scope releases
+        # every pin the query made before the next one starts.
+        with cache_scope():
+            t0 = time.perf_counter()
+            df = fn(spark, SF_DIR)
+            n = df.count() if hasattr(df, "count") else len(df)
+            assert n >= 0
+            return round(time.perf_counter() - t0, 3)
 
     # Two passes, keep the per-query minimum: single-shot numbers on this
     # shared-host VM carry multi-second hypervisor noise (BASELINE.md —
@@ -556,7 +554,7 @@ def main() -> None:
     # + run count); the audit detail (retries, trial medians, vs_repo
     # ratios, band verdicts) lives in BENCH_OUT.json above.
     slim = {
-        k: out[k]
+        k: out.get(k)
         for k in ("metric", "value", "unit", "queries", "runs_per_query", "sf")
     }
     print(json.dumps(slim))

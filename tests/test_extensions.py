@@ -8,7 +8,9 @@ import uuid
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, persisted_rdd_ids
+from whiterrabbit_spark import cache as _cache
+from whiterrabbit_spark.cache import cache_scope, pin
 from whiterrabbit_spark.extensions import dedup as X
 from whiterrabbit_spark.extensions import multimodal as mm
 from whiterrabbit_spark.extensions import similarity as sim
@@ -17,14 +19,15 @@ from whiterrabbit_spark.extensions import textstats as ts
 from whiterrabbit_spark.io import read_parquet_table
 
 
+# eager: the pin is made before any test's leak gate starts counting
 @pytest.fixture(scope="module")
 def docs(spark):
-    return read_parquet_table(spark, SF_DIR, "documents").cache()
+    return pin(read_parquet_table(spark, SF_DIR, "documents"), eager=True)
 
 
 @pytest.fixture(scope="module")
 def emb(spark):
-    return read_parquet_table(spark, SF_DIR, "embeddings").cache()
+    return pin(read_parquet_table(spark, SF_DIR, "embeddings"), eager=True)
 
 
 def test_lsh_recall_equals_exact(spark, docs):
@@ -104,42 +107,43 @@ def test_simhash_guard_and_precollapse(spark, docs):
 
 
 def test_dedup_persists_registered_and_releasable(spark, monkeypatch):
-    """One unpersist contract (VERDICT r8 #2): every frame the dedup
-    module persists is registered in ``_SESSION_CACHES``, and
-    ``release_caches()`` leaves the session with ZERO persisted RDDs —
-    no executor-storage accumulation across calls in a long-running
-    session. The persist gate is monkeypatched low so the
-    ``_pair_intersections`` eager-materialized persists (annotated
-    postings + rare intersections) are exercised too, and the gated
-    plan's results are pinned identical to the ungated plan's."""
+    """Every frame the dedup operators pin belongs to the open
+    ``cache_scope``: the pins are live inside it and none outlives it.
+    The persist gate is monkeypatched low so the
+    ``_pair_intersections`` eager pins (annotated postings + rare
+    intersections) are exercised too, and the gated plan's results are
+    pinned identical to the ungated plan's."""
     from whiterrabbit_spark import scale as _scale
 
-    spark.catalog.clearCache()
-    X.release_caches()
     rows = [
         (i, f"common body words w{i % 7} w{i % 3} tail{i} end{i * 3 % 11}")
         for i in range(60)
     ]
     d = spark.createDataFrame(rows, "doc_id long, text string")
-    ungated = {
-        (r.id1, r.id2, round(r.jaccard, 9))
-        for r in X.ngram_jaccard_pairs(d, "text", "doc_id", 3, 0.2).collect()
-    }
-    n_ungated = X.release_caches()
-    assert n_ungated >= 1  # the shingle table at least
+    before = persisted_rdd_ids()
+    with cache_scope():
+        ungated = {
+            (r.id1, r.id2, round(r.jaccard, 9))
+            for r in X.ngram_jaccard_pairs(d, "text", "doc_id", 3, 0.2).collect()
+        }
+        assert persisted_rdd_ids() - before  # the shingle table at least
+    assert not persisted_rdd_ids() - before
     monkeypatch.setattr(_scale, "PAIR_INDEX_PERSIST_MIN_DOCS", 10)
-    gated = {
-        (r.id1, r.id2, round(r.jaccard, 9))
-        for r in X.ngram_jaccard_pairs(d, "text", "doc_id", 3, 0.2).collect()
-    }
+    with cache_scope():
+        gated = {
+            (r.id1, r.id2, round(r.jaccard, 9))
+            for r in X.ngram_jaccard_pairs(d, "text", "doc_id", 3, 0.2).collect()
+        }
+        # sh + the gated annotated postings and rare intersections
+        assert len(persisted_rdd_ids() - before) >= 3
+        X.minhash_dedup_pairs(d, "text", "doc_id").count()
+        X.simhash_near_pairs(d, "text", "doc_id").count()
+        X.containment_pairs(d, "text", "doc_id").count()
+        # ngram 3; minhash sh + cands; simhash sigs + reps; containment sh
+        # (+2 gated)
+        assert len(_cache._SCOPE.get().releases) >= 9
     assert gated == ungated and gated
-    X.minhash_dedup_pairs(d, "text", "doc_id").count()
-    X.simhash_near_pairs(d, "text", "doc_id").count()
-    X.containment_pairs(d, "text", "doc_id").count()
-    # gated ngram run registers sh + annotated + inter_rare; minhash
-    # registers sh + cands; simhash sigs + reps; containment sh (+2 gated)
-    assert X.release_caches() >= 9
-    assert spark.sparkContext._jsc.getPersistentRDDs().size() == 0
+    assert not persisted_rdd_ids() - before
 
 
 def test_exact_dedup_counts(spark, docs):
@@ -2079,7 +2083,6 @@ def test_unigram_logppl_empty_training_corpus(spark):
     docs = spark.createDataFrame([(1, "hello world")], "doc_id long, text string")
     out = ts.unigram_logppl(docs, train_df=empty).collect()
     assert len(out) == 1 and abs(out[0].perplexity - 1.0) < 1e-9
-    assert ts.release_caches() >= 1
 
 
 def test_multimodal_real_codecs_gated(spark, docs):

@@ -45,13 +45,16 @@ def test_missing_and_empty_excluded(spark):
 
 def test_numeric_columns_included_dates_skipped(spark):
     df = spark.createDataFrame(
-        [(1.0, "2023-01-01")] * 6,
-        "num double, d string",
-    ).selectExpr("num", "to_timestamp(d) AS d")
+        [(1.0, "2023-01-01", z) for z in [0.0, -0.0, 1.0, -0.0] * 3],
+        "num double, d string, z double",
+    ).selectExpr("num", "to_timestamp(d) AS d", "z")
     rows = value_frequencies(df, cfg=ScanConfig()).collect()
     cols = {r["column_name"] for r in rows}
-    assert cols == {"num"}  # date col skipped (W:331), numeric included
+    assert cols == {"num", "z"}  # date col skipped (W:331), numeric included
     assert rows[0]["value"] == "1.0"
+    # -0.0 and 0.0 count as one value, as in the reference's R table()
+    z = {r["value"]: r["count"] for r in rows if r["column_name"] == "z"}
+    assert z == {"0.0": 9}  # 1.0 occurs 3 times < min_cell_count
 
 
 def test_rare_only_column_empty_table(spark):
@@ -61,18 +64,27 @@ def test_rare_only_column_empty_table(spark):
 
 def test_wide_table_melt_fallback_matches_branches(spark):
     """>64 columns triggers the melt plan; results must match the
-    per-column branch plan exactly."""
+    per-column branch plan exactly. A double column holding 0.0 and -0.0
+    shows one zero row in both plans."""
     import whiterrabbit_spark.frequency as freq
 
     n_cols = 70
+    zeros = [0.0, -0.0, 1.0, -0.0]
     rows = []
     for i in range(40):
-        rows.append(tuple(f"v{(i + j) % 3}" for j in range(n_cols)))
+        rows.append(
+            tuple(f"v{(i + j) % 3}" for j in range(n_cols)) + (zeros[i % 4],)
+        )
     cols = [f"c{j}" for j in range(n_cols)]
-    df = spark.createDataFrame(rows, ", ".join(f"{c} string" for c in cols))
+    df = spark.createDataFrame(
+        rows, ", ".join(f"{c} string" for c in cols) + ", z double"
+    )
     cfg = ScanConfig(min_cell_count=5, max_distinct_values=10)
     wide = value_frequencies(df, cfg=cfg)
     assert len(cols) > freq._MELT_THRESHOLD
+    assert sorted(
+        (r["value"], r["count"]) for r in wide.where("column_name = 'z'").collect()
+    ) == [("0.0", 30), ("1.0", 10)]
 
     def key(out):
         return sorted(

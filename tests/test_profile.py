@@ -82,8 +82,8 @@ def test_string_columns_have_no_numeric_stats(lineitem_summary):
 
 def test_empty_vs_missing_and_all_empty(spark):
     df = spark.createDataFrame(
-        [("", None, "x"), ("", None, ""), ("", None, None)],
-        "all_empty string, all_na string, mixed string",
+        [("", None, "x", 0.0), ("", None, "", -0.0), ("", None, None, 1.0)],
+        "all_empty string, all_na string, mixed string, zeros double",
     )
     summary, raw = profile_table(df, CFG, table_name="t")
     rows = {r["column_name"]: r.asDict() for r in summary.collect()}
@@ -92,6 +92,12 @@ def test_empty_vs_missing_and_all_empty(spark):
     assert rows["all_na"]["missing_count"] == 3
     assert rows["mixed"]["non_missing_count"] == 1
     assert set(all_empty_fields(raw)) == {"all_empty", "all_na"}
+    # one zero on both sides of small_table_rows (melt and per-column
+    # histograms), as the reference's R unique() counts it
+    for row_hint in (3, CFG.small_table_rows + 1):
+        summary, _ = profile_table(df, CFG, table_name="t", row_hint=row_hint)
+        rows = {r["column_name"]: r.asDict() for r in summary.collect()}
+        assert rows["zeros"]["distinct_count"] == 2
 
 
 def test_stddev_n1_is_null(spark):
@@ -1052,6 +1058,7 @@ def test_type7_cuts_distributed_matches_percentile(spark):
 
     import pyspark.sql.functions as F
 
+    from whiterrabbit_spark.cache import pin
     from whiterrabbit_spark.profile import type7_cuts_distributed
 
     rng = random.Random(3)
@@ -1061,7 +1068,7 @@ def test_type7_cuts_distributed_matches_percentile(spark):
         + [-7.5] * 3
     )
     df = spark.createDataFrame([(v,) for v in vals], "v double")
-    hist = df.groupBy("v").agg(F.count(F.lit(1)).alias("cnt")).persist()
+    hist = pin(df.groupBy("v").agg(F.count(F.lit(1)).alias("cnt")))
     probs = [0.1, 0.25, 0.5, 0.75, 0.9, 0.99]
     want = hist.agg(
         F.percentile(F.col("v"), F.lit(probs), F.col("cnt"))

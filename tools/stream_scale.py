@@ -21,7 +21,7 @@ props) — so the A/B for the r9 projection change is recorded in one
 epoch on one host.
 
 Usage:
-  python tools/stream_scale.py gen  [--reps 20,80]
+  python tools/stream_scale.py gen
   python tools/stream_scale.py run  [--names ...] [--scales s2,s8]
   python tools/stream_scale.py report   # -> STREAM_SCALE_r9.json
 
@@ -262,7 +262,6 @@ def cmd_report(out_name: str = "STREAM_SCALE_r9.json") -> None:
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("cmd", choices=["gen", "run", "report"])
-    ap.add_argument("--reps", default=None, help="scale=reps overrides")
     ap.add_argument("--names", default=None)
     ap.add_argument("--scales", default="s2,s8")
     ap.add_argument("--force", action="store_true")

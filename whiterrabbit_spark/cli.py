@@ -11,6 +11,7 @@ from __future__ import annotations
 import argparse
 import sys
 
+from whiterrabbit_spark.cache import cache_scope
 from whiterrabbit_spark.config import ScanConfig
 from whiterrabbit_spark.report import write_tsv_report, write_xlsx_report
 from whiterrabbit_spark.scan import scan_folder
@@ -84,32 +85,34 @@ def main(argv: list[str] | None = None) -> int:
         source_format=args.source_format,
     )
     spark = get_spark(cpus=args.cpus)
-    if args.state_dir:
-        from whiterrabbit_spark.incremental import scan_folder_incremental
+    # pins made while scanning stay live until the report is written
+    with cache_scope():
+        if args.state_dir:
+            from whiterrabbit_spark.incremental import scan_folder_incremental
 
-        overview, results, inc = scan_folder_incremental(
-            spark, args.working_folder, args.state_dir, cfg,
-            max_parallel_files=args.parallel_files,
-        )
-        print(
-            f"Incremental scan: {len(inc.scanned)} scanned, "
-            f"{len(inc.loaded)} cached, {len(inc.evicted)} evicted"
-        )
-    else:
-        overview, results = scan_folder(
-            spark, args.working_folder, cfg, max_parallel_files=args.parallel_files
-        )
-    if args.output_format == "xlsx":
-        out = write_xlsx_report(overview, results, args.output_dir, args.prefix)
-        print(f"Wrote Excel file: {out}")
-    elif args.output_format == "parquet":
-        from whiterrabbit_spark.report import write_parquet_report
+            overview, results, inc = scan_folder_incremental(
+                spark, args.working_folder, args.state_dir, cfg,
+                max_parallel_files=args.parallel_files,
+            )
+            print(
+                f"Incremental scan: {len(inc.scanned)} scanned, "
+                f"{len(inc.loaded)} cached, {len(inc.evicted)} evicted"
+            )
+        else:
+            overview, results = scan_folder(
+                spark, args.working_folder, cfg, max_parallel_files=args.parallel_files
+            )
+        if args.output_format == "xlsx":
+            out = write_xlsx_report(overview, results, args.output_dir, args.prefix)
+            print(f"Wrote Excel file: {out}")
+        elif args.output_format == "parquet":
+            from whiterrabbit_spark.report import write_parquet_report
 
-        for f in write_parquet_report(overview, results, args.output_dir, args.prefix):
-            print(f"Wrote: {f}")
-    else:
-        for f in write_tsv_report(overview, results, args.output_dir, args.prefix):
-            print(f"Wrote: {f}")
+            for f in write_parquet_report(overview, results, args.output_dir, args.prefix):
+                print(f"Wrote: {f}")
+        else:
+            for f in write_tsv_report(overview, results, args.output_dir, args.prefix):
+                print(f"Wrote: {f}")
     return 0
 
 

@@ -34,6 +34,8 @@ import sys
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from whiterrabbit_spark.cache import cache_scope
+
 STEPS = ("normalize", "quality", "dedup", "decontam", "cap", "split")
 
 
@@ -241,39 +243,40 @@ def main(argv: list[str] | None = None) -> int:
               file=sys.stderr)
         return 2
 
-    df, counts = curate(
-        corpus,
-        steps,
-        text_col=args.text_col,
-        id_col=args.id_col,
-        min_quality=args.min_quality,
-        dedup_mode=args.dedup,
-        jaccard_threshold=args.jaccard_threshold,
-        bench=bench,
-        shingle_k=args.shingle_k,
-        overlap_threshold=args.overlap_threshold,
-        weights=_parse_weights(args.weights),
-        salt=args.salt,
-        cap_per_source=args.cap_per_source,
-        group_col=args.group_col,
-        count_stages=args.report is not None,
-    )
+    with cache_scope():
+        df, counts = curate(
+            corpus,
+            steps,
+            text_col=args.text_col,
+            id_col=args.id_col,
+            min_quality=args.min_quality,
+            dedup_mode=args.dedup,
+            jaccard_threshold=args.jaccard_threshold,
+            bench=bench,
+            shingle_k=args.shingle_k,
+            overlap_threshold=args.overlap_threshold,
+            weights=_parse_weights(args.weights),
+            salt=args.salt,
+            cap_per_source=args.cap_per_source,
+            group_col=args.group_col,
+            count_stages=args.report is not None,
+        )
 
-    partition_cols = (
-        [c.strip() for c in args.partition_by.split(",")]
-        if args.partition_by
-        else (["split"] if "split" in steps else [])
-    )
-    if partition_cols:
-        write_curated(df, args.output, partition_cols,
-                      max_records_per_file=args.max_records_per_file)
-    else:
-        writer = df.write.mode("overwrite")
-        if args.max_records_per_file:
-            writer = writer.option(
-                "maxRecordsPerFile", args.max_records_per_file
-            )
-        writer.parquet(args.output)
+        partition_cols = (
+            [c.strip() for c in args.partition_by.split(",")]
+            if args.partition_by
+            else (["split"] if "split" in steps else [])
+        )
+        if partition_cols:
+            write_curated(df, args.output, partition_cols,
+                          max_records_per_file=args.max_records_per_file)
+        else:
+            writer = df.write.mode("overwrite")
+            if args.max_records_per_file:
+                writer = writer.option(
+                    "maxRecordsPerFile", args.max_records_per_file
+                )
+            writer.parquet(args.output)
     print(f"Wrote curated corpus: {args.output}")
 
     if args.report is not None:

@@ -26,6 +26,8 @@ import sys
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from whiterrabbit_spark.cache import cache_scope
+
 
 def _length_quartiles(df: DataFrame, col: str) -> list[float]:
     hist = (
@@ -142,9 +144,10 @@ def main(argv: list[str] | None = None) -> int:
     from whiterrabbit_spark.session import get_spark
 
     spark = get_spark(app_name="wrs-dataset-card", cpus=args.cpus)
-    card = build_card(
-        spark, args.input, args.text_col, args.lang_col, args.source_col
-    )
+    with cache_scope():
+        card = build_card(
+            spark, args.input, args.text_col, args.lang_col, args.source_col
+        )
     if args.out:
         os.makedirs(os.path.dirname(os.path.abspath(args.out)), exist_ok=True)
         with open(args.out, "w", encoding="utf-8") as fh:

@@ -36,6 +36,7 @@ def main(argv: list[str] | None = None) -> int:
     from pyspark.sql import functions as F
 
     from whiterrabbit_spark import io as wio
+    from whiterrabbit_spark.cache import cache_scope
     from whiterrabbit_spark.extensions.discovery import folder_join_candidates
     from whiterrabbit_spark.session import get_spark
 
@@ -54,11 +55,12 @@ def main(argv: list[str] | None = None) -> int:
     if len(tables) < 2:
         print("Need at least two tables to discover joins", file=sys.stderr)
         return 2
-    out = folder_join_candidates(tables, args.min_containment)
-    rows = out.orderBy(
-        F.greatest("containment_a", "containment_b").desc(),
-        "col_a", "col_b",
-    ).collect()
+    with cache_scope():
+        out = folder_join_candidates(tables, args.min_containment)
+        rows = out.orderBy(
+            F.greatest("containment_a", "containment_b").desc(),
+            "col_a", "col_b",
+        ).collect()
     header = ("col_a\tcol_b\tn_a\tn_b\tn_common\tjaccard\t"
               "containment_a\tcontainment_b")
     lines = [header] + [

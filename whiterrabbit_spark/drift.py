@@ -28,6 +28,7 @@ import sys
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from whiterrabbit_spark.cache import cache_scope
 from whiterrabbit_spark.config import ScanConfig
 from whiterrabbit_spark.scan import scan_folder
 
@@ -192,13 +193,14 @@ def main(argv: list[str] | None = None) -> int:
         scan_field_values=False,  # drift needs summaries, not value tables
     )
     spark = get_spark(cpus=args.cpus)
-    reports = run_drift(spark, args.old, args.new, cfg)
-    for name, df in reports.items():
-        safe = name.replace("/", "_").replace(".", "_")
-        path = os.path.join(args.output_dir, f"{args.prefix}_{safe}.tsv")
-        pdf = df.toPandas()
-        pdf.to_csv(path, sep="\t", index=False)
-        print(f"Wrote: {path}")
+    with cache_scope():
+        reports = run_drift(spark, args.old, args.new, cfg)
+        for name, df in reports.items():
+            safe = name.replace("/", "_").replace(".", "_")
+            path = os.path.join(args.output_dir, f"{args.prefix}_{safe}.tsv")
+            pdf = df.toPandas()
+            pdf.to_csv(path, sep="\t", index=False)
+            print(f"Wrote: {path}")
     return 0
 
 

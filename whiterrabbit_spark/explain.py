@@ -24,6 +24,7 @@ def main(argv: list[str] | None = None) -> int:
     sys.path.insert(0, ".")
     from tools.plan_audit import STREAMING_PREFIXES, audit_plan
 
+    from whiterrabbit_spark.cache import cache_scope
     from whiterrabbit_spark.queries import build_registry
     from whiterrabbit_spark.session import get_spark
 
@@ -63,12 +64,13 @@ def main(argv: list[str] | None = None) -> int:
             out = {"query": name, "skipped": "streaming"}
             print(json.dumps(out))
             continue
-        df = queries[name](spark, args.sf)
-        plan = df._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"
+        with cache_scope():
+            df = queries[name](spark, args.sf)
+            plan = df._jdf.queryExecution().explainString(
+                spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+                    "formatted"
+                )
             )
-        )
         audit = {"query": name, **audit_plan(plan)}
         if args.all_audit:
             print(json.dumps(audit))

@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from whiterrabbit_spark.cache import pin
+
 #: End-of-word marker (Sennrich's </w>): keeps "low" in "lowest" from
 #: merging across word boundaries. Corpora that legitimately contain
 #: U+2581 should strip or remap it upstream (normalize_text) — the
@@ -93,7 +95,7 @@ def learn_bpe_merges(
     tie-break (count DESC, (left, right) ASC) and produce identical
     tables — pinned by tests.
     """
-    wf = word_freq_table(df, text_col).localCheckpoint(eager=False)
+    wf = pin(word_freq_table(df, text_col), checkpoint=True, eager=False)
     n_vocab = wf.count()
     spark = df.sparkSession
     schema = "rank int, left string, right string, pair_count long"
@@ -116,12 +118,12 @@ def learn_bpe_merges(
     # distributed path: vocab as (symbols array, count) frame
     import pandas as pd
 
-    cur = wf.select(
+    cur = pin(wf.select(
         F.concat(
             F.split(F.col("word"), ""), F.array(F.lit(EOW))
         ).alias("syms"),
         F.col("count"),
-    ).localCheckpoint(eager=False)
+    ), checkpoint=True, eager=False)
     merges = []
     for rank in range(n_merges):
         pairs = (
@@ -155,9 +157,9 @@ def learn_bpe_merges(
                 ]
                 yield pdf
 
-        cur = cur.mapInPandas(
+        cur = pin(cur.mapInPandas(
             apply_merge, "syms array<string>, count long"
-        ).localCheckpoint(eager=False)
+        ), checkpoint=True, eager=False)
     return spark.createDataFrame(merges, schema)
 
 

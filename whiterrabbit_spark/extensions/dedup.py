@@ -28,35 +28,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from whiterrabbit_spark import scale
+from whiterrabbit_spark.cache import memo, pin
 
 MERSENNE_P = 2_147_483_647  # 2^31 - 1
-
-# Persisted intermediates are REGISTERED here — one unpersist contract
-# for the module (VERDICT r8 #2): the returned plans still read these
-# frames after the building function exits, so inline unpersist is
-# impossible, and the graph operators' materialize-top-k-then-unpersist
-# form does not apply (these operators return corpus-sized pair frames,
-# not few-row summaries). Same contract as textstats._SESSION_CACHES:
-# long-running sessions call release_caches() between runs instead of
-# relying on LRU eviction; tests pin that nothing persists OUTSIDE the
-# registry (guide §5 — unpersist when done).
-_SESSION_CACHES: list[DataFrame] = []
-
-
-def _register_cache(df: DataFrame) -> DataFrame:
-    _SESSION_CACHES.append(df.persist())
-    return df
-
-
-def release_caches() -> int:
-    """Unpersist every intermediate this module has cached (safe while
-    downstream plans exist — they recompute). Returns the number
-    released."""
-    n = 0
-    while _SESSION_CACHES:
-        _SESSION_CACHES.pop().unpersist()
-        n += 1
-    return n
 
 
 def md5_int60(c: Column) -> Column:
@@ -186,8 +160,7 @@ def _pair_intersections(
         sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("__df")), "shingle"
     )
     if persist_intermediates:
-        annotated = _register_cache(annotated)
-        annotated.count()
+        annotated = pin(annotated, eager=True)
     rare = annotated.where(F.col("__df") <= max_candidate_df)
     hot = annotated.where(F.col("__df") > max_candidate_df)
     ra = rare.alias("a")
@@ -202,8 +175,7 @@ def _pair_intersections(
         .agg(F.count(F.lit(1)).alias("__inter_r"))
     )
     if persist_intermediates:
-        inter_rare = _register_cache(inter_rare)
-        inter_rare.count()
+        inter_rare = pin(inter_rare, eager=True)
     hot_a = hot.select(F.col("doc_id").alias("id1"), F.col("shingle").alias("__sh"))
     hot_b = hot.select(F.col("doc_id").alias("id2"), F.col("shingle").alias("__sh"))
     inter_hot = (
@@ -245,7 +217,7 @@ def ngram_jaccard_pairs(
     the one-job metadata count that resolves the gate is noise next to
     the operator."""
     persist_inter = df.count() > scale.PAIR_INDEX_PERSIST_MIN_DOCS
-    sh = _register_cache(_shingle_table(df, text_col, id_col, k))
+    sh = pin(_shingle_table(df, text_col, id_col, k))
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     inter = _pair_intersections(
         sh, None if verify_all_pairs else max_candidate_df,
@@ -544,8 +516,7 @@ def minhash_dedup_pairs(
 
     The shingle table feeds four subplans (hashing, two verify sides, size
     counts); it is persisted so the tokenize+shingle pass runs once, not
-    four times — registered in ``_SESSION_CACHES``, call
-    ``release_caches()`` for deterministic release.
+    four times — released when the caller's ``cache_scope`` exits.
 
     ``max_bucket_size`` passes through to the candidate generator — the
     giant-cluster guard was previously reachable only by composing the
@@ -565,12 +536,12 @@ def minhash_dedup_pairs(
         num_hashes, rows_per_band = auto_minhash_banding(
             df, text_col, id_col, k=k, threshold=threshold, seed=seed
         )
-    sh = _register_cache(_shingle_table(df, text_col, id_col, k))
+    sh = pin(_shingle_table(df, text_col, id_col, k))
     sigs = minhash_signatures_from_shingles(sh, num_hashes, seed)
     # candidates persist + count: the count both materializes the frame
     # the verify will re-read from cache (so it costs ~nothing extra)
     # and is the honest input to the verify plan switch below.
-    cands = _register_cache(
+    cands = pin(
         lsh_candidate_pairs(sigs, num_hashes, rows_per_band,
                             max_bucket_size=max_bucket_size))
     n_cands = cands.count()
@@ -731,11 +702,11 @@ def simhash_near_pairs(
     # expansion sides) and reps feeds three more (band table, bucket
     # guard, self-row emission) — persist BOTH so the tokenize + 60-vote
     # agg and the collapse shuffle each run once (minhash's
-    # shingle-table pattern; registered — release_caches()). Measured:
+    # shingle-table pattern; released with the caller's cache_scope). Measured:
     # without these pins ReusedExchange did NOT cover the repeats and
     # the composed mid-scale run re-executed the signature agg ~4x
     # (71 s vs 26 s stepwise).
-    sigs = _register_cache(simhash_signatures(df, text_col, id_col))
+    sigs = pin(simhash_signatures(df, text_col, id_col))
     if max_bucket_size == "auto":
         import math
 
@@ -744,7 +715,7 @@ def simhash_near_pairs(
             256, 4 * math.ceil(n / float(1 << (SIMHASH_BITS // 4)))
         )
     # one representative (min doc_id) per distinct signature
-    reps = _register_cache(
+    reps = pin(
         sigs.groupBy("simhash").agg(
             F.min("doc_id").alias("doc_id"),
             F.count(F.lit(1)).alias("__gsz"),
@@ -856,11 +827,6 @@ def novel_documents(
     )
 
 
-# (semanticHash, params) -> estimated hottest-digest row count; see
-# line_dedup's probe — session-lifetime, driver-side, O(corpora) entries
-_LINE_DEDUP_PROBE_CACHE: dict = {}
-
-
 def line_dedup(
     df: DataFrame,
     text_col: str = "text",
@@ -931,15 +897,10 @@ def line_dedup(
 
     # hot-digest probe: non-trivial lines only (trivial digests are
     # per-row unique by construction, so they can never be hot). The
-    # estimate is a corpus property, so it is cached per input plan
-    # (semanticHash) for the session — repeated calls over the same
-    # source (bench loops, retried jobs) pay the probe job once.
-    cache_key = (
-        df.semanticHash(), text_col, delimiter, min_chars,
-        probe_fraction, seed,
-    )
-    est_hottest = _LINE_DEDUP_PROBE_CACHE.get(cache_key)
-    if est_hottest is None:
+    # estimate is a corpus property, so it is memoized per input plan
+    # (semanticHash) — repeated calls over the same source in one scope
+    # pay the probe job once.
+    def probe_hottest() -> float:
         if probe_fraction < 1.0:
             probe_src = df.sample(fraction=probe_fraction, seed=seed)
         else:
@@ -958,8 +919,13 @@ def line_dedup(
             .agg(F.max("c").alias("m"))
             .collect()[0]["m"]
         ) or 0
-        est_hottest = probe_max / min(probe_fraction, 1.0)
-        _LINE_DEDUP_PROBE_CACHE[cache_key] = est_hottest
+        return probe_max / min(probe_fraction, 1.0)
+
+    est_hottest = memo(
+        ("line_dedup_hottest", df.semanticHash(), text_col, delimiter,
+         min_chars, probe_fraction, seed),
+        probe_hottest,
+    )
 
     if est_hottest <= hot_digest_threshold:
         w = Window.partitionBy("_digest").orderBy("_id", "_pos")
@@ -1102,9 +1068,9 @@ def connected_components(
             f"connected_components: {src} ({src_t.simpleString()}) and "
             f"{dst} ({dst_t.simpleString()}) must share one id type"
         )
-    edges = edges.select(
+    edges = pin(edges.select(
         F.col(src).alias(src), F.col(dst).alias(dst)
-    ).localCheckpoint()
+    ), checkpoint=True)
     stats = edges.agg(
         F.count(F.lit(1)).alias("n"),
         F.count(src).alias("ns"),
@@ -1185,13 +1151,13 @@ def connected_components(
     # only edges are self-loops leave the star iteration here and are
     # restored as their own singleton clusters at the end (parity with
     # the driver union-find path, which labels them (n, n))
-    cur = (
+    cur = pin(
         edges.select(
             F.greatest(src, dst).alias("a"), F.least(src, dst).alias("b")
         )
         .where(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint()
+        .distinct(),
+        checkpoint=True,
     )
     all_nodes = (
         edges.select(F.col(src).alias("node"))
@@ -1200,7 +1166,7 @@ def connected_components(
     )
     rounds = 0
     for _ in range(max_iter):
-        nxt = _small_star(_large_star(cur)).localCheckpoint()
+        nxt = pin(_small_star(_large_star(cur)), checkpoint=True)
         rounds += 1
         # converged when the (canonically oriented) edge sets coincide;
         # both sides are O(edges) and shrink monotonically in practice
@@ -1379,7 +1345,7 @@ def containment_pairs(
     multiply-consumed subtrees persist (see the constant's rationale).
     """
     persist_inter = df.count() > scale.PAIR_INDEX_PERSIST_MIN_DOCS
-    sh = _register_cache(_shingle_table(df, text_col, id_col, k))
+    sh = pin(_shingle_table(df, text_col, id_col, k))
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     inter = _pair_intersections(
         sh, None if verify_all_pairs else max_candidate_df,
@@ -1612,7 +1578,7 @@ def duplicated_span_coverage(
     Returns ``(group, n_docs, docs_with_dups, mean_dup_frac,
     max_dup_frac)`` ordered by group.
     """
-    spans = _span_table(df, text_col, id_col, k).localCheckpoint(eager=True)
+    spans = pin(_span_table(df, text_col, id_col, k), checkpoint=True)
     dup_hashes = (
         spans.groupBy("span_hash")
         .agg(F.countDistinct(id_col).alias("__nd"))
@@ -1808,7 +1774,7 @@ def substring_scrub(
     """
     if mode not in ("remove", "mask"):
         raise ValueError(f"substring_scrub: unknown mode {mode!r}")
-    spans = _span_table(df, text_col, id_col, k).localCheckpoint(eager=True)
+    spans = pin(_span_table(df, text_col, id_col, k), checkpoint=True)
     keepers = (
         spans.groupBy("span_hash")
         .agg(

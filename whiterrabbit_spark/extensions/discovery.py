@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from whiterrabbit_spark.cache import pin
+
 
 def _melt_distinct(df: DataFrame, cols: list[str], side: str) -> DataFrame:
     """DISTINCT (column, value-as-string) pairs for the given columns."""
@@ -162,7 +164,7 @@ def folder_join_candidates(
             "value",
         )
         melted = m if melted is None else melted.unionByName(m)
-    melted = melted.persist()
+    melted = pin(melted)
     sizes = melted.groupBy("col").agg(F.count(F.lit(1)).alias("n"))
     a = melted.select(
         F.col("tbl").alias("tbl_a"), F.col("col").alias("col_a"), "value"
@@ -333,7 +335,7 @@ def t_closeness(
         .groupBy(*[F.col(c) for c in quasi_cols], F.col(sensitive_col))
         .agg(F.count(F.lit(1)).alias("n_cv"))
     )
-    cells = cells.persist()
+    cells = pin(cells)
     # global distribution over the sensitive values: |values| rows
     glob = cells.groupBy(sensitive_col).agg(F.sum("n_cv").alias("n_v"))
     total = glob.agg(F.sum("n_v").alias("n_total"))

@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from whiterrabbit_spark.cache import cache_scope, pin
+
 
 def cooccurrence_edges(
     df: DataFrame,
@@ -68,30 +70,25 @@ def degree_stats(edges: DataFrame, top_k: int = 10) -> DataFrame:
     # explode both endpoints out of each row instead of a self-union
     # that would run the edge plan twice; the |nodes|-row degree frame
     # persists so the total aggregate doesn't re-run it either
-    ends = edges.select(
-        F.explode(F.array(F.col("src"), F.col("dst"))).alias("node")
-    )
-    deg = ends.groupBy("node").agg(
-        F.count(F.lit(1)).alias("degree")
-    ).persist()
-    total = deg.agg(F.sum("degree").alias("__t"))
-    out = (
-        deg.join(F.broadcast(total))
-        .select(
-            "node",
-            "degree",
-            (F.col("degree") / F.col("__t")).alias("degree_share"),
+    with cache_scope():
+        ends = edges.select(
+            F.explode(F.array(F.col("src"), F.col("dst"))).alias("node")
         )
-        .orderBy(F.col("degree").desc(), "node")
-        .limit(top_k)
-    )
-    try:
-        # top_k rows: materialize + unpersist (no storage accumulation,
-        # no cross-call cache serving through the CacheManager)
+        deg = pin(ends.groupBy("node").agg(F.count(F.lit(1)).alias("degree")))
+        total = deg.agg(F.sum("degree").alias("__t"))
+        out = (
+            deg.join(F.broadcast(total))
+            .select(
+                "node",
+                "degree",
+                (F.col("degree") / F.col("__t")).alias("degree_share"),
+            )
+            .orderBy(F.col("degree").desc(), "node")
+            .limit(top_k)
+        )
+        # top_k rows: collected before the scope releases its pins
         rows = out.collect()
         return edges.sparkSession.createDataFrame(rows, out.schema)
-    finally:
-        deg.unpersist()
 
 
 def triangle_count(edges: DataFrame) -> DataFrame:
@@ -126,65 +123,56 @@ def triangle_count(edges: DataFrame) -> DataFrame:
     # preserves the (deg, id) orientation order AND its ties exactly.
     # null endpoints form no edge (least/greatest would otherwise fold
     # (null, x) into a spurious (x, x) self-loop)
-    e = (
-        edges.where(F.col("src").isNotNull() & F.col("dst").isNotNull())
-        .select(
-            F.least("src", "dst").alias("src"),
-            F.greatest("src", "dst").alias("dst"),
-        )
-        .distinct()
-        .persist()
-    )
-    deg = (
-        e.select(F.col("src").alias("n"))
-        .unionAll(e.select(F.col("dst").alias("n")))
-        .groupBy("n")
-        .agg(F.count(F.lit(1)).alias("d"))
-        .persist()
-    )
-    # orient each edge low-(deg, id) -> high-(deg, id)
-    oriented = (
-        e.join(deg.select(F.col("n").alias("src"), F.col("d").alias("ds")), "src")
-        .join(deg.select(F.col("n").alias("dst"), F.col("d").alias("dd")), "dst")
-        .select(
-            F.when(
-                (F.col("ds") < F.col("dd"))
-                | ((F.col("ds") == F.col("dd")) & (F.col("src") < F.col("dst"))),
-                F.struct(F.col("src").alias("a"), F.col("dst").alias("b")),
+    with cache_scope():
+        e = pin(
+            edges.where(F.col("src").isNotNull() & F.col("dst").isNotNull())
+            .select(
+                F.least("src", "dst").alias("src"),
+                F.greatest("src", "dst").alias("dst"),
             )
-            .otherwise(
-                F.struct(F.col("dst").alias("a"), F.col("src").alias("b"))
-            )
-            .alias("o")
+            .distinct()
         )
-        .select("o.a", "o.b")
-        .persist()
-    )
-    ab = oriented.select("a", "b")
-    bc = oriented.select(F.col("a").alias("b"), F.col("b").alias("c"))
-    ac = oriented.select(F.col("a").alias("a"), F.col("b").alias("c"))
-    tri = ab.join(bc, "b").join(ac, ["a", "c"])
-    out = (
-        tri.agg(F.count(F.lit(1)).alias("n_triangles"))
-        # n_edges from the deduped ORIENTED frame: equals |e| on a
-        # one-row-per-edge input and the true undirected edge count on
-        # a symmetrized one (where |e| would double-count)
-        .join(F.broadcast(oriented.agg(F.count(F.lit(1)).alias("n_edges"))))
-        .join(F.broadcast(deg.agg(F.count(F.lit(1)).alias("n_nodes"))))
-        .select("n_nodes", "n_edges", "n_triangles")
-    )
-    try:
-        # one row: materialize before unpersist so the returned frame
-        # doesn't lazily recompute the two-hop after the caches drop,
-        # and so repeated calls don't accumulate executor storage
+        deg = pin(
+            e.select(F.col("src").alias("n"))
+            .unionAll(e.select(F.col("dst").alias("n")))
+            .groupBy("n")
+            .agg(F.count(F.lit(1)).alias("d"))
+        )
+        # orient each edge low-(deg, id) -> high-(deg, id)
+        oriented = pin(
+            e.join(deg.select(F.col("n").alias("src"), F.col("d").alias("ds")), "src")
+            .join(deg.select(F.col("n").alias("dst"), F.col("d").alias("dd")), "dst")
+            .select(
+                F.when(
+                    (F.col("ds") < F.col("dd"))
+                    | ((F.col("ds") == F.col("dd")) & (F.col("src") < F.col("dst"))),
+                    F.struct(F.col("src").alias("a"), F.col("dst").alias("b")),
+                )
+                .otherwise(
+                    F.struct(F.col("dst").alias("a"), F.col("src").alias("b"))
+                )
+                .alias("o")
+            )
+            .select("o.a", "o.b")
+        )
+        ab = oriented.select("a", "b")
+        bc = oriented.select(F.col("a").alias("b"), F.col("b").alias("c"))
+        ac = oriented.select(F.col("a").alias("a"), F.col("b").alias("c"))
+        tri = ab.join(bc, "b").join(ac, ["a", "c"])
+        out = (
+            tri.agg(F.count(F.lit(1)).alias("n_triangles"))
+            # n_edges from the deduped ORIENTED frame: equals |e| on a
+            # one-row-per-edge input and the true undirected edge count on
+            # a symmetrized one (where |e| would double-count)
+            .join(F.broadcast(oriented.agg(F.count(F.lit(1)).alias("n_edges"))))
+            .join(F.broadcast(deg.agg(F.count(F.lit(1)).alias("n_nodes"))))
+            .select("n_nodes", "n_edges", "n_triangles")
+        )
+        # one row: collected before the scope releases its pins
         rows = out.collect()
         return edges.sparkSession.createDataFrame(
             rows, "n_nodes long, n_edges long, n_triangles long"
         )
-    finally:
-        oriented.unpersist()
-        deg.unpersist()
-        e.unpersist()
 
 
 def _pagerank_step(both, nodes, ranks, n_nodes, damping, bcast):
@@ -259,73 +247,67 @@ def pagerank(
 
     Returns the top-``top_k`` ``(node, rank)`` rows, rank DESC.
     """
-    both = edges.select("src", "dst").unionAll(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    if not edges_distinct:
-        # an induced edge list (cooccurrence_edges) is already one row
-        # per (src < dst) pair, so its symmetrization has no dups and
-        # callers pass edges_distinct=True to skip this 2|E| shuffle
-        both = both.distinct()
-    else:
-        # the raw union doubles the upstream partition count; coalesce
-        # (narrow, no shuffle) so the cached edge table keeps
-        # cluster-sized partitions instead of 2x tiny ones whose
-        # per-task overhead every iteration re-pays
-        both = both.coalesce(edges.sparkSession.sparkContext.defaultParallelism)
-    both = both.persist()
-    out_deg = both.groupBy("src").agg(F.count(F.lit(1)).alias("__deg"))
-    nodes = out_deg.select(F.col("src").alias("node"), "__deg").persist()
-    n_nodes = nodes.count()
-    # per-iteration rank state is |nodes| rows; when that fits a
-    # broadcast (node id + 2 numerics, bytes-gated on the known
-    # n_nodes), ship ranks/contribs to the edge partitions instead of
-    # shuffling the cached 2|E| edge table through a sort-merge join
-    # every iteration (guide §3.1); above the gate Catalyst/AQE decide.
-    bcast = (
-        F.broadcast if n_nodes <= broadcast_nodes_max else (lambda df: df)
-    )
-    ranks = nodes.select(
-        "node", F.lit(1.0 / n_nodes).alias("rank"), "__deg"
-    )
-    prev_ck = ranks
-    for i in range(n_iter):
-        ranks = _pagerank_step(both, nodes, ranks, n_nodes, damping, bcast)
-        if (i + 1) % checkpoint_every == 0 and i + 1 < n_iter:
-            if tol > 0:
-                ranks = ranks.localCheckpoint(eager=True)
-                delta = (
-                    ranks.join(
-                        prev_ck.select(
-                            "node", F.col("rank").alias("__prev")
-                        ),
-                        "node",
+    with cache_scope():
+        both = edges.select("src", "dst").unionAll(
+            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        )
+        if not edges_distinct:
+            # an induced edge list (cooccurrence_edges) is already one row
+            # per (src < dst) pair, so its symmetrization has no dups and
+            # callers pass edges_distinct=True to skip this 2|E| shuffle
+            both = both.distinct()
+        else:
+            # the raw union doubles the upstream partition count; coalesce
+            # (narrow, no shuffle) so the cached edge table keeps
+            # cluster-sized partitions instead of 2x tiny ones whose
+            # per-task overhead every iteration re-pays
+            both = both.coalesce(edges.sparkSession.sparkContext.defaultParallelism)
+        both = pin(both)
+        out_deg = both.groupBy("src").agg(F.count(F.lit(1)).alias("__deg"))
+        nodes = pin(out_deg.select(F.col("src").alias("node"), "__deg"))
+        n_nodes = nodes.count()
+        # per-iteration rank state is |nodes| rows; when that fits a
+        # broadcast (node id + 2 numerics, bytes-gated on the known
+        # n_nodes), ship ranks/contribs to the edge partitions instead of
+        # shuffling the cached 2|E| edge table through a sort-merge join
+        # every iteration (guide §3.1); above the gate Catalyst/AQE decide.
+        bcast = (
+            F.broadcast if n_nodes <= broadcast_nodes_max else (lambda df: df)
+        )
+        ranks = nodes.select(
+            "node", F.lit(1.0 / n_nodes).alias("rank"), "__deg"
+        )
+        prev_ck = ranks
+        for i in range(n_iter):
+            ranks = _pagerank_step(both, nodes, ranks, n_nodes, damping, bcast)
+            if (i + 1) % checkpoint_every == 0 and i + 1 < n_iter:
+                if tol > 0:
+                    ranks = pin(ranks, checkpoint=True)
+                    delta = (
+                        ranks.join(
+                            prev_ck.select(
+                                "node", F.col("rank").alias("__prev")
+                            ),
+                            "node",
+                        )
+                        .agg(F.sum(F.abs(F.col("rank") - F.col("__prev"))))
+                        .first()[0]
                     )
-                    .agg(F.sum(F.abs(F.col("rank") - F.col("__prev"))))
-                    .first()[0]
-                )
-                prev_ck = ranks
-                if delta is not None and delta < tol:
-                    break
-            else:
-                ranks = ranks.localCheckpoint(eager=False)
-    out = (
-        ranks.select("node", "rank")
-        .orderBy(F.col("rank").desc(), "node")
-        .limit(top_k)
-    )
-    try:
-        # top_k rows: materialize before unpersist so the returned frame
-        # doesn't recompute the iterations after the caches drop, and so
-        # repeated calls don't accumulate executor storage — and so a
-        # later identical plan can't be served from this call's leaked
-        # cache (the CacheManager matches logical plans across jobs,
-        # which silently turned repeat benchmarks into cache reads)
+                    prev_ck = ranks
+                    if delta is not None and delta < tol:
+                        break
+                else:
+                    ranks = pin(ranks, checkpoint=True, eager=False)
+        out = (
+            ranks.select("node", "rank")
+            .orderBy(F.col("rank").desc(), "node")
+            .limit(top_k)
+        )
+        # top_k rows: collected before the scope releases its pins, so a
+        # later identical plan can't be served from this call's cache
+        # (the CacheManager matches logical plans across jobs)
         rows = out.collect()
         return edges.sparkSession.createDataFrame(rows, out.schema)
-    finally:
-        nodes.unpersist()
-        both.unpersist()
 
 
 def adamic_adar(
@@ -353,40 +335,36 @@ def adamic_adar(
     # the edge frame is typically an induced self-join (co-purchase etc.)
     # and feeds FOUR consumers here (degrees, both wedge legs, the anti
     # join) — persist it once instead of re-running the induction per leg
-    e = edges.select("src", "dst").distinct().persist()
-    sym = e.unionAll(e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-                     .select(F.col("src"), F.col("dst")))
-    deg = sym.groupBy(F.col("src").alias("w")).agg(
-        F.count(F.lit(1)).alias("deg")
-    )
-    mid = deg.where(F.col("deg") >= 2)
-    if max_degree is not None:
-        mid = mid.where(F.col("deg") <= max_degree)
-    adj = sym.select(F.col("src").alias("w"), F.col("dst").alias("n")).join(
-        mid, "w"
-    )
-    left = adj.select("w", "deg", F.col("n").alias("u"))
-    right = adj.select("w", F.col("n").alias("v"))
-    wedges = left.join(right, "w").where(F.col("u") < F.col("v"))
-    # the cut orders on the 6-dp-ROUNDED score (repo discipline for
-    # engine-reproducible top-k): fold-order float noise on tied pairs
-    # must not move the rank-k boundary between engines
-    scored = wedges.groupBy(F.col("u").alias("src"), F.col("v").alias("dst")).agg(
-        F.count(F.lit(1)).alias("common_neighbors"),
-        F.round(
-            F.sum(1.0 / F.log(F.col("deg").cast("double"))), 6
-        ).alias("aa_score"),
-    )
-    out = (
-        scored.join(e, ["src", "dst"], "left_anti")
-        .orderBy(F.col("aa_score").desc(), "src", "dst")
-        .limit(top_k)
-    )
-    try:
-        # top_k rows: materialize + unpersist, same contract as
-        # triangle_count/pagerank (no storage accumulation, no
-        # cross-call cache serving through the CacheManager)
+    with cache_scope():
+        e = pin(edges.select("src", "dst").distinct())
+        sym = e.unionAll(e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+                         .select(F.col("src"), F.col("dst")))
+        deg = sym.groupBy(F.col("src").alias("w")).agg(
+            F.count(F.lit(1)).alias("deg")
+        )
+        mid = deg.where(F.col("deg") >= 2)
+        if max_degree is not None:
+            mid = mid.where(F.col("deg") <= max_degree)
+        adj = sym.select(F.col("src").alias("w"), F.col("dst").alias("n")).join(
+            mid, "w"
+        )
+        left = adj.select("w", "deg", F.col("n").alias("u"))
+        right = adj.select("w", F.col("n").alias("v"))
+        wedges = left.join(right, "w").where(F.col("u") < F.col("v"))
+        # the cut orders on the 6-dp-ROUNDED score (repo discipline for
+        # engine-reproducible top-k): fold-order float noise on tied pairs
+        # must not move the rank-k boundary between engines
+        scored = wedges.groupBy(F.col("u").alias("src"), F.col("v").alias("dst")).agg(
+            F.count(F.lit(1)).alias("common_neighbors"),
+            F.round(
+                F.sum(1.0 / F.log(F.col("deg").cast("double"))), 6
+            ).alias("aa_score"),
+        )
+        out = (
+            scored.join(e, ["src", "dst"], "left_anti")
+            .orderBy(F.col("aa_score").desc(), "src", "dst")
+            .limit(top_k)
+        )
+        # top_k rows: collected before the scope releases its pins
         rows = out.collect()
         return edges.sparkSession.createDataFrame(rows, out.schema)
-    finally:
-        e.unpersist()

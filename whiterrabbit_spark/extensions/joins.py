@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from whiterrabbit_spark.cache import pin
+
 _SIDE = "__wrs_is_left"
 
 
@@ -52,9 +54,9 @@ def _asof_nearest(
     # rows must not cross-join); monotonically_increasing_id is
     # nondeterministic across recomputations, so pin it with a checkpoint
     # before both passes consume it.
-    keyed = left.withColumn(
+    keyed = pin(left.withColumn(
         "__row_id", F.monotonically_increasing_id()
-    ).localCheckpoint()
+    ), checkpoint=True)
     bwd = asof_join(
         keyed, right, time_col=time_col, by=by,
         tolerance_s=tolerance_s, direction="backward", right_prefix="__b_",

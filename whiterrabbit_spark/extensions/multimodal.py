@@ -23,6 +23,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from whiterrabbit_spark.cache import pin
+
 MEDIA_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType()),
@@ -896,7 +898,7 @@ def video_near_pairs(
         frame_hashes = image_ahash(frames.select("media_id", "payload")).where(
             F.col("ahash").isNotNull()
         )
-    fh = frame_hashes.select("media_id", "ahash").distinct().persist()
+    fh = pin(frame_hashes.select("media_id", "ahash").distinct())
     rare = (
         fh.groupBy("ahash")
         .agg(F.count(F.lit(1)).alias("__df"))
@@ -950,10 +952,9 @@ def video_keep_best(
     """
     from whiterrabbit_spark.extensions import dedup
 
-    hashes = (
+    hashes = pin(
         image_ahash(frames.select("media_id", "payload"))
         .where(F.col("ahash").isNotNull())
-        .persist()
     )
     counts = hashes.groupBy("media_id").agg(
         F.count(F.lit(1)).alias("__n_decodable")

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from whiterrabbit_spark.cache import pin
+
 
 def funnel_completion_times(
     events: DataFrame,
@@ -179,17 +181,18 @@ def resample_fill(
     """
     g = F.col(group_col)
     bucket = F.date_trunc(unit, F.col(ts_col))
-    agg = (
+    agg = pin(
         events.where(g.isNotNull() & F.col(ts_col).isNotNull())
         .groupBy(g.alias("group_key"), bucket.alias("bucket_ts"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.sum(F.col(value_col).cast("double")).alias("v_sum"),
-        )
+        ),
         # the O(groups x buckets) aggregate feeds BOTH the bounds frame
         # and the densify join; a lazy local checkpoint materializes it
         # once instead of re-scanning the raw events per consumer
-        .localCheckpoint(eager=False)
+        checkpoint=True,
+        eager=False,
     )
     bounds = agg.groupBy("group_key").agg(
         F.min("bucket_ts").alias("lo"), F.max("bucket_ts").alias("hi")
@@ -322,11 +325,11 @@ def attribution_decay(
     channel — Σ credit = number of converting users.
     """
     ep = F.col(ts_col).cast("timestamp").cast("double")
-    conv = (
+    conv = pin(
         events.where(F.col(type_col) == conversion_type)
         .groupBy(user_col)
-        .agg(F.min(ep).alias("__tc"))
-        .localCheckpoint(eager=True)
+        .agg(F.min(ep).alias("__tc")),
+        checkpoint=True,
     )
     touches = (
         events.where(F.col(type_col) != conversion_type)
@@ -342,11 +345,11 @@ def attribution_decay(
         )
     )
     w_user = Window.partitionBy(user_col)
-    credited = touches.withColumn(
+    credited = pin(touches.withColumn(
         "__credit", F.col("__w") / F.sum("__w").over(w_user)
     ).select(
         user_col, "channel", "__credit"
-    ).localCheckpoint(eager=True)
+    ), checkpoint=True)
     per_channel = credited.groupBy("channel").agg(
         F.round(F.sum("__credit"), 6).alias("credit"),
         F.count(F.lit(1)).alias("n_touches"),
@@ -451,13 +454,12 @@ def item_associations(
     Returns ``(item_a, item_b, n_baskets, support, conf_a_to_b,
     conf_b_to_a, lift)``.
     """
-    base = (
+    base = pin(
         df.where(F.col(basket_col).isNotNull() & F.col(item_col).isNotNull())
         .select(
             F.col(basket_col).alias("__b"), F.col(item_col).alias("__i")
         )
         .distinct()
-        .persist()
     )
     # basket total stays LAZY — a 1-row aggregate broadcast-joined in,
     # exactly like the oracle's CROSS JOIN nb; an eager .count() here
@@ -779,7 +781,7 @@ def episode_pairs(
     # the two join branches prune DIFFERENT envelope columns, so
     # ReuseExchange can't kick in — without this persist the raw-event
     # scan + groupBy would run twice
-    env = env.persist()
+    env = pin(env)
     a = env.select(
         F.col(user_col).alias("__u"),
         F.col(type_col).alias("type_a"),

@@ -35,6 +35,7 @@ import random
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from whiterrabbit_spark.cache import cache_scope, pin
 from whiterrabbit_spark.scale import (
     DRIVER_KMEANS_THRESHOLD,
     LSH_FETCH_JOIN_MAX_BYTES,
@@ -469,7 +470,7 @@ def hyperplane_near_pairs(
             include_vec=False, prescreen_bits=prescreen_bits,
         )
         if persist_buckets:
-            buckets = buckets.persist()
+            buckets = pin(buckets)
         if max_bucket_size is not None:
             buckets = _drop_oversized(buckets, max_bucket_size)
         cand = (
@@ -534,7 +535,7 @@ def hyperplane_near_pairs(
     # bit-identical cosine values (same expressions, same inputs).
     buckets = buckets.withColumn("nv", _norm(F.col("v")))
     if persist_buckets:
-        buckets = buckets.persist()
+        buckets = pin(buckets)
     if max_bucket_size is not None:
         buckets = _drop_oversized(buckets, max_bucket_size)
     pre_a = [F.col("psig").alias("pa")] if h_max is not None else []
@@ -959,11 +960,8 @@ def fit_spherical_centers(
     # NPEs on uncached DSv2-columnar-backed vector rows (null buffer
     # elided in the batch accessor) — materializing via the SQL cache
     # sidesteps it, and the fit reads the input maxIter times anyway
-    feats = feats.cache()
-    try:
-        km = KMeans(k=n_lists, seed=seed, maxIter=max_iter).fit(feats)
-    finally:
-        feats.unpersist()
+    with cache_scope():
+        km = KMeans(k=n_lists, seed=seed, maxIter=max_iter).fit(pin(feats))
     return [list(map(float, c)) for c in km.clusterCenters()]
 
 
@@ -1215,7 +1213,7 @@ def ivf_tuning_curve(
             nearest_lists_expr(F.col(vec_col), centers, n_lists)
         ).alias("probe_rank0", "list_id"),
     )
-    scored = (
+    scored = pin(
         c.join(F.broadcast(q), "list_id")
         .where(F.col("neighbor_id") != F.col("query_id"))
         .repartition(
@@ -1226,8 +1224,8 @@ def ivf_tuning_curve(
             "neighbor_id",
             (F.col("probe_rank0") + 1).alias("probe_rank"),
             _dot(F.col("qv"), F.col("cv")).alias("cosine"),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        checkpoint=True,
     )
     # ONE window pass for every level: the running count of
     # probe_rank ≤ p rows in (cosine DESC, id ASC) order IS level p's
@@ -1345,11 +1343,8 @@ def semantic_dedup(
         array_to_vector(_unit(F.col(vec_col))).alias("features"),
     )
     # cached through fit+transform (DSv2 NPE, see fit_spherical_centers);
-    # registered with the shared session-cache registry so
-    # textstats.release_caches() frees it between re-fit runs
-    from whiterrabbit_spark.extensions.textstats import _register_cache
-
-    featurized = _register_cache(featurized)
+    # the caller's cache_scope frees it
+    featurized = pin(featurized)
     km = KMeans(k=n_clusters, seed=seed, maxIter=20).fit(featurized)
     # assignment via the fitted model (JVM-side, O(k·d) per row) — an
     # inlined-centers expression tree would not compile at the 50k
@@ -1683,10 +1678,10 @@ def token_cosine_pairs(
     # kept feeds the norms and BOTH sides of the pair stage — persist so
     # the tokenize+tf+df pass runs once (memory-and-disk, spills at
     # scale; LRU-evicted).
-    kept = tf.join(
+    kept = pin(tf.join(
         df_t.where((F.col("df_t") >= 2) & (F.col("df_t") <= df_cap)),
         "tok",
-    ).persist()
+    ))
     norms = kept.groupBy("id").agg(
         F.sum(F.col("tf") * F.col("tf")).alias("s")
     )
@@ -2007,7 +2002,7 @@ def centroid_similarity_matrix(
         )
     )
     cent = exploded.groupBy("lbl", "dim").agg(F.avg("v").alias("c"))
-    cent = cent.persist()
+    cent = pin(cent)
     norms = cent.groupBy("lbl").agg(
         F.sqrt(F.sum(F.col("c") * F.col("c"))).alias("nrm")
     )

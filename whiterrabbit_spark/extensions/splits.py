@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from whiterrabbit_spark.cache import pin
+
 SPLIT_BUCKETS = 10_000
 
 
@@ -142,9 +144,9 @@ def pack_shards(
     # range shuffle differently per execution (observed at sf0.1: offsets
     # keyed to one run's __pid applied to another run's partitions). Also
     # saves the second computation of the shuffle + window.
-    local = ranged.withColumn(
+    local = pin(ranged.withColumn(
         "__local_cum", F.sum(F.col(weight_col).cast("double")).over(w)
-    ).localCheckpoint()
+    ), checkpoint=True)
     # Range partitions are index-ordered by key range, so the exclusive
     # prefix over partition totals (driver-side, one row per partition)
     # is the partition's global offset.
@@ -510,9 +512,9 @@ def negative_sampling(
     )
     # pos feeds the anchor fan-out AND the partner lookup (and total);
     # persist so the distinct+prefix pass runs once, not four times.
-    pos = _hist_exclusive_prefix(
+    pos = pin(_hist_exclusive_prefix(
         ids, "h", "cnt", n_parts, out_col="pos"
-    ).persist()
+    ))
     total = pos.agg(F.count(F.lit(1)).alias("n"))
     anchors = pos.crossJoin(F.broadcast(total)).select(
         F.col("id").alias("anchor_id"),
@@ -576,10 +578,9 @@ def srm_check(
     )
     # |splits| rows feeding the total, the expectations, and the chi2
     # fold — persist so the corpus groupBy runs once.
-    obs = (
+    obs = pin(
         assigned.groupBy("split")
         .agg(F.count(F.lit(1)).alias("n_obs"))
-        .persist()
     )
     tot = obs.agg(F.sum("n_obs").alias("n_total"))
     w_expr = F.create_map(

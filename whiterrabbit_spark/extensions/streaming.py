@@ -20,6 +20,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from whiterrabbit_spark.cache import pin
+
 EVENTS_SCHEMA = T.StructType(
     [
         T.StructField("event_id", T.LongType()),
@@ -769,9 +771,9 @@ def lateness_profile(
         .orderBy("__a")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    local = ranged.withColumn(
+    local = pin(ranged.withColumn(
         "__lmax", F.max("__t").over(w)
-    ).localCheckpoint()
+    ), checkpoint=True)
     tops = {
         r["__pid"]: r["m"]
         for r in local.groupBy("__pid").agg(F.max("__t").alias("m")).collect()

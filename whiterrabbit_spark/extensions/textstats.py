@@ -17,6 +17,8 @@ import math
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from whiterrabbit_spark.cache import pin
+
 # Tiny per-language stopword lists for the n-gram/stopword-hit language
 # heuristic. Deliberately small + deterministic; a real deployment would
 # plug in fastText or CLD3 via a pandas UDF (see multimodal.py for the
@@ -40,29 +42,6 @@ def _isin_fn(words: tuple[str, ...]):
     the element index), so the closure must bind the word list outside
     the lambda."""
     return lambda x: x.isin(*words)
-
-# Persisted intermediates (unigram LM, bigram counts, vocab counts) are
-# registered here: the returned plans still read them after the building
-# function exits, so they cannot unpersist inline. Long-running sessions
-# that re-fit models call release_caches() between runs instead of
-# relying on LRU eviction.
-_SESSION_CACHES: list[DataFrame] = []
-
-
-def _register_cache(df: DataFrame) -> DataFrame:
-    _SESSION_CACHES.append(df.persist())
-    return df
-
-
-def release_caches() -> int:
-    """Unpersist every intermediate this module has cached (safe while
-    downstream plans exist — they recompute). Returns the number
-    released."""
-    n = 0
-    while _SESSION_CACHES:
-        _SESSION_CACHES.pop().unpersist()
-        n += 1
-    return n
 
 
 def tokens(text: Column) -> Column:
@@ -523,8 +502,8 @@ def unigram_logppl(
     the LEFT join's coalesce.
     """
     train = train_df if train_df is not None else df
-    lm = _register_cache(
-        # persisted (session-released via release_caches()): the N/V
+    lm = pin(
+        # persisted (released with the caller's cache_scope): the N/V
         # action below and the scoring join both read it — without this
         # the O(tokens) fit shuffle runs twice
         train.select(F.explode(tokens(F.col(text_col))).alias("tok"))
@@ -590,8 +569,8 @@ def pmi_collocations(
     )
     # persisted across the in-function total agg AND the caller's
     # evaluation of the returned plan; O(distinct bigrams) rows, released
-    # via release_caches()
-    counted = _register_cache(
+    # with the caller's cache_scope
+    counted = pin(
         pairs.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("pair_count"))
     )
     total_n = counted.agg(F.sum("pair_count")).first()[0] or 0
@@ -640,8 +619,8 @@ def vocab_coverage(
     lexically for a reproducible cut.
     """
     # persisted across the total agg and the caller's evaluation;
-    # O(vocab) rows, released via release_caches()
-    counted = _register_cache(
+    # O(vocab) rows, released with the caller's cache_scope
+    counted = pin(
         df.select(F.explode(tokens(F.col(text_col))).alias("token"))
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("count"))
@@ -903,12 +882,12 @@ def bigram_logppl(
     Returns ``(id_col, n_bigrams, avg_neg_logp, perplexity)``.
     """
     train = train_df if train_df is not None else df
-    uni = _register_cache(
+    uni = pin(
         train.select(F.explode(tokens(F.col(text_col))).alias("tok"))
         .groupBy("tok")
         .agg(F.count(F.lit(1)).alias("_c1"))
     )
-    bi = _register_cache(
+    bi = pin(
         doc_bigrams(train, text_col, id_col)
         .groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).alias("_c12"))

@@ -41,6 +41,14 @@ def _eligible(dt: T.DataType) -> bool:
     return not isinstance(dt, (T.DateType, T.TimestampType, T.TimestampNTZType))
 
 
+def fold_signed_zero(c: Column, dt: T.DataType) -> Column:
+    """``c`` with float ``-0.0`` folded into ``0.0``: the reference's R
+    ``table`` counts one zero (a groupBy on the string would count two)."""
+    if isinstance(dt, (T.FloatType, T.DoubleType)):
+        return c + F.lit(0).cast(dt)  # IEEE 754: -0.0 + 0.0 == +0.0
+    return c
+
+
 def value_frequencies(
     df: DataFrame,
     columns: list[str] | None = None,
@@ -67,7 +75,7 @@ def value_frequencies(
     else:
         branches = []
         for c in columns:
-            v = F.col(c).cast("string")
+            v = fold_signed_zero(F.col(c), df.schema[c].dataType).cast("string")
             branches.append(
                 df.select(v.alias("value"))
                 .where(v.isNotNull() & (v != ""))
@@ -98,7 +106,8 @@ def _melt_counts(df: DataFrame, columns: list[str], cfg: ScanConfig) -> DataFram
                 *[
                     F.struct(
                         F.lit(c).alias("column_name"),
-                        F.col(c).cast("string").alias("value"),
+                        fold_signed_zero(F.col(c), df.schema[c].dataType)
+                        .cast("string").alias("value"),
                     )
                     for c in columns
                 ]

@@ -32,12 +32,12 @@ import hashlib
 import json
 import os
 import shutil
-from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
 
 from whiterrabbit_spark import io as wio
+from whiterrabbit_spark.cache import ThreadPool
 from whiterrabbit_spark.config import ScanConfig
 from whiterrabbit_spark.overview import FileScanResult, build_overview
 from whiterrabbit_spark.report import sortable_columns
@@ -123,7 +123,7 @@ def scan_folder_incremental(
             to_scan.append((name, path))
 
     if max_parallel_files > 1 and len(to_scan) > 1:
-        with ThreadPoolExecutor(max_workers=max_parallel_files) as pool:
+        with ThreadPool(max_workers=max_parallel_files) as pool:
             fresh = list(
                 pool.map(lambda t: scan_file(spark, t[1], cfg), to_scan)
             )

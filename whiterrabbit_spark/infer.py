@@ -37,8 +37,7 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from concurrent.futures import ThreadPoolExecutor
-
+from whiterrabbit_spark.cache import ThreadPool, cache_scope, pin
 from whiterrabbit_spark.config import ScanConfig
 
 # columns per inference-gate job: each column carries a
@@ -168,9 +167,7 @@ def _sample_gate(df: DataFrame, cols: list[str], cfg: ScanConfig) -> dict[str, d
     # 24-pattern date) gate expressions evaluate with full parallelism
     # instead of on a single core.
     par = df.sparkSession.sparkContext.defaultParallelism
-    sample_df = (
-        df.select(cols).limit(cfg.inference_sample_size * 4).repartition(par).cache()
-    )
+    sample_df = df.select(cols).limit(cfg.inference_sample_size * 4).repartition(par)
 
     # Round 1 (cheap): non-empty + numeric-cast rates for every column.
     # Round 2 (expensive, len(DATE_PATTERNS)-branch coalesce per column):
@@ -208,7 +205,8 @@ def _sample_gate(df: DataFrame, cols: list[str], cfg: ScanConfig) -> dict[str, d
         return {c: row[f"{c}__date_ok"] for c in chunk}
 
     out: dict[str, dict] = {}
-    try:
+    with cache_scope():
+        sample_df = pin(sample_df)
         if len(cols) > cfg.wide_infer_cols:
             # Extreme-width path: two melt jobs with O(1)-in-width plans
             # replace ~cols/16 chunked agg jobs whose Catalyst
@@ -251,7 +249,7 @@ def _sample_gate(df: DataFrame, cols: list[str], cfg: ScanConfig) -> dict[str, d
                 ):
                     out[date_cols[r["__pos"]]]["date_ok"] = r["date_ok"]
             return out
-        with ThreadPoolExecutor(max_workers=8) as pool:
+        with ThreadPool(max_workers=8) as pool:
             for d in pool.map(num_chunk, _chunk(cols, _GATE_COLS_PER_JOB * 8)):
                 out.update(d)
             thr = cfg.success_threshold
@@ -262,8 +260,6 @@ def _sample_gate(df: DataFrame, cols: list[str], cfg: ScanConfig) -> dict[str, d
             for d in pool.map(date_chunk, _chunk(date_cols, _GATE_COLS_PER_JOB)):
                 for c, v in d.items():
                     out[c]["date_ok"] = v
-    finally:
-        sample_df.unpersist()
     return out
 
 

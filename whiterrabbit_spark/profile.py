@@ -54,7 +54,6 @@ from __future__ import annotations
 import dataclasses
 import functools
 import math
-from concurrent.futures import ThreadPoolExecutor
 from typing import Any
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
@@ -62,7 +61,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from whiterrabbit_spark import scale
+from whiterrabbit_spark.cache import ThreadPool, cache_scope, memo, pin
 from whiterrabbit_spark.config import ScanConfig
+from whiterrabbit_spark.frequency import fold_signed_zero
 from whiterrabbit_spark.infer import nonempty
 
 SUMMARY_SCHEMA = T.StructType(
@@ -196,7 +197,7 @@ def _exact_distinct_and_percentiles(
         q = row.get("q")
         return f.name, row["distinct"], (list(q) if q is not None else None)
 
-    with ThreadPoolExecutor(max_workers=min(len(fields), 12) or 1) as pool:
+    with ThreadPool(max_workers=min(len(fields), 12) or 1) as pool:
         out = list(pool.map(one, fields))
     return (
         {name: d for name, d, _ in out},
@@ -221,7 +222,8 @@ def _exact_distinct_and_percentiles_melt(
     """
     entries = []
     for f in fields:
-        c = F.col(f.name)
+        # one zero, as the per-column form's groupBy on the double sees
+        c = fold_signed_zero(F.col(f.name), f.dataType)
         if _is_numeric(f.dataType):
             cond, dv = c.isNotNull(), c.cast("double")
         elif _is_date(f.dataType):
@@ -340,7 +342,7 @@ def profile_table(
     # Job set 1 (per chunk) and job set 2 (per-column histograms) are
     # independent — overlap them so the cluster stays busy instead of
     # running serial barriers.
-    with ThreadPoolExecutor(
+    with ThreadPool(
         max_workers=min(len(chunks) + 1, _PROFILE_POOL_WIDTH)
     ) as pool:
         fut_chunks = [pool.submit(run_chunk, ch) for ch in chunks]
@@ -1664,11 +1666,11 @@ def equi_depth_histogram(
                 "n_rows",
             )
         )
-    hist = (
-        df.select(c.alias("v")).where(F.col("v").isNotNull())
-        .groupBy("v").agg(F.count(F.lit(1)).alias("cnt"))
-    ).persist()
-    try:
+    with cache_scope():
+        hist = pin(
+            df.select(c.alias("v")).where(F.col("v").isNotNull())
+            .groupBy("v").agg(F.count(F.lit(1)).alias("cnt"))
+        )
         row = hist.agg(
             F.min("v").alias("lo"),
             F.max("v").alias("hi"),
@@ -1702,14 +1704,12 @@ def equi_depth_histogram(
                 "n_rows",
             )
         )
-        # materialize before unpersist so the returned frame doesn't
-        # recompute the histogram scan lazily after the cache is gone
+        # materialize inside the scope so the returned frame doesn't
+        # recompute the histogram scan lazily after the pin is gone
         rows = out.collect()
         return spark.createDataFrame(
             rows, "bucket int, bucket_lo double, bucket_hi double, n_rows long"
         )
-    finally:
-        hist.unpersist()
 
 
 def ecdf_lookup(
@@ -1784,37 +1784,14 @@ def ecdf_lookup(
     )
 
 
-# (semanticHash, column) -> approx distinct count; the broadcast-vs-merge
-# decision is a corpus property, so repeated builds over the same source
-# (bench loops, retried jobs) pay the probe job once per session.
-# CAVEAT: semanticHash is plan-based — in a long-lived session where the
-# SAME path's data grows (streaming appends, re-written partitions) the
-# cached count goes stale and a guard could pick broadcast for a column
-# that outgrew it. Call clear_probe_caches() after mutating a source
-# in-session; fresh sessions (jobs, notebooks-per-run) are unaffected.
-_DISTINCT_PROBE_CACHE: dict = {}
-
-
-def clear_probe_caches() -> None:
-    """Drop the session-lifetime scale-probe caches (see the staleness
-    caveat on ``_DISTINCT_PROBE_CACHE``); also clears the line-dedup
-    hot-digest probe cache."""
-    _DISTINCT_PROBE_CACHE.clear()
-    try:
-        from whiterrabbit_spark.extensions import dedup as _dd
-
-        _dd._LINE_DEDUP_PROBE_CACHE.clear()
-    except (ImportError, AttributeError):
-        pass
-
-
 def _approx_distinct(df: DataFrame, column: str) -> int:
-    key = (df.semanticHash(), column)
-    n = _DISTINCT_PROBE_CACHE.get(key)
-    if n is None:
-        n = df.agg(F.approx_count_distinct(column).alias("nd")).collect()[0]["nd"]
-        _DISTINCT_PROBE_CACHE[key] = n
-    return n
+    """Approx distinct count of ``column``, memoized per (plan, column):
+    the plan choices it feeds are corpus properties."""
+    return memo(
+        ("approx_distinct", df.semanticHash(), column),
+        lambda: df.agg(F.approx_count_distinct(column).alias("nd"))
+        .collect()[0]["nd"],
+    )
 
 
 def distributed_row_number(
@@ -1843,11 +1820,9 @@ def distributed_row_number(
     """
     spark = df.sparkSession
     n_parts = n_partitions or spark.sparkContext.defaultParallelism
-    d = (
-        df.repartitionByRange(n_parts, *order_cols)
-        .localCheckpoint(eager=True)
-        .withColumn("__pid", F.spark_partition_id())
-    )
+    d = pin(
+        df.repartitionByRange(n_parts, *order_cols), checkpoint=True
+    ).withColumn("__pid", F.spark_partition_id())
     totals = d.groupBy("__pid").agg(F.count(F.lit(1)).alias("__ptot"))
     w_off = Window.orderBy("__pid").rowsBetween(
         Window.unboundedPreceding, -1
@@ -2056,7 +2031,7 @@ def spearman_matrix(
     """
     spark = df.sparkSession
     n_parts = n_partitions or spark.sparkContext.defaultParallelism
-    joint = (
+    joint = pin(
         df.select(
             F.posexplode(
                 F.array(
@@ -2073,8 +2048,8 @@ def spearman_matrix(
         .select("__pid", "__p.va", "__p.vb")
         .where(F.col("va").isNotNull() & F.col("vb").isNotNull())
         .groupBy("__pid", "va", "vb")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint(eager=True)
+        .agg(F.count(F.lit(1)).alias("cnt")),
+        checkpoint=True,
     )
     totals = joint.groupBy("__pid").agg(F.sum("cnt").alias("__ntot"))
 
@@ -2972,9 +2947,9 @@ def heavy_hitters(
     # persist the (≤ partitions·(m+1))-row summary: both the total and
     # the candidate frame reference it, and without the cache each
     # reference would re-run the MG scan over the full column
-    summary = src.mapInPandas(
-        mg, f"value {dtype}, n long, is_marker boolean"
-    ).persist()
+    summary = pin(
+        src.mapInPandas(mg, f"value {dtype}, n long, is_marker boolean")
+    )
     total = summary.where("is_marker").agg(F.sum("n").alias("__total"))
     cands = summary.where(~F.col("is_marker")).select("value").distinct()
     counts = (
@@ -3211,7 +3186,7 @@ def gini_coefficient(
     spark = df.sparkSession
     n_parts = n_partitions or spark.sparkContext.defaultParallelism
     v = F.col("v")
-    melted = (
+    melted = pin(
         df.select(
             F.posexplode(
                 F.array(*[F.col(c).cast("double") for c in cols])
@@ -3219,10 +3194,10 @@ def gini_coefficient(
         )
         .where(v.isNotNull() & (v >= 0))
         .groupBy("__pos", "v")
-        .agg(F.count(F.lit(1)).alias("cnt"))
+        .agg(F.count(F.lit(1)).alias("cnt")),
         # pin the O(Σ distinct) hist: the prefix helper traverses it 3×
         # and each lazy traversal would re-scan the fact table
-        .localCheckpoint(eager=True)
+        checkpoint=True,
     )
     cum = _hist_exclusive_prefix_grouped(melted, ["__pos"], "v", "cnt", n_parts)
     c = F.col("cnt").cast("double")
@@ -3584,11 +3559,10 @@ def pareto_concentration(
         .groupBy(key_col)
         .agg(F.sum(w_fix).alias("w"))
     )
-    hist = (
+    hist = pin(
         per_key.groupBy("w")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .withColumn("wsum", F.col("w") * F.col("cnt"))
-        .persist()
     )
     # Descending weight order == ascending -w. One fused prefix pass
     # (the _hist_exclusive_prefix scheme, two running sums per window):
@@ -3853,11 +3827,10 @@ def theil_sen_daily(
     the OLS slope over the same series rides along as the comparison.
     """
     day = F.date_trunc("day", F.col(ts_col)).cast("date")
-    series = (
+    series = pin(
         df.where(F.col(ts_col).isNotNull() & F.col(value_col).isNotNull())
         .groupBy(day.alias("d"))
         .agg(F.avg(F.col(value_col).cast("double")).alias("x"))
-        .persist()
     )
     a = series.select(F.col("d").alias("d1"), F.col("x").alias("x1"))
     b = series.select(F.col("d").alias("d2"), F.col("x").alias("x2"))
@@ -4033,7 +4006,7 @@ def layout_prune_report_multi(
     if materialize:
         # one job scans the fact table once and pins the O(distinct)
         # histogram; every downstream traversal reads these blocks
-        melted = melted.localCheckpoint(eager=True)
+        melted = pin(melted, checkpoint=True)
 
     # ONE grouped prefix pass (all layouts × all probes share the
     # bucketed traversal), then per probe: one chunk explode + two
@@ -4313,9 +4286,9 @@ def km_survival(
         )
     else:
         n_parts = df.sparkSession.sparkContext.defaultParallelism
-        hist = hist.localCheckpoint(eager=True)
+        hist = pin(hist, checkpoint=True)
         total = hist.agg(F.sum("n_t").alias("__tot"))
-        pre = (
+        pre = pin(
             _hist_exclusive_prefix(hist, "t", "n_t", n_parts)
             .join(F.broadcast(total))
             .withColumn(
@@ -4327,8 +4300,8 @@ def km_survival(
                     1.0 - F.col("d_t") / F.col("n_at_risk").cast("double")
                 ),
             )
-            .drop("before", "__tot")
-            .localCheckpoint(eager=True)
+            .drop("before", "__tot"),
+            checkpoint=True,
         )
         # d_t == n_at_risk (everyone remaining dies at the terminal
         # event time) makes log(0) NULL. The window path's SUM silently
@@ -4701,12 +4674,11 @@ def dow_adjusted_outliers(
     is_outlier)``.
     """
     day = F.date_trunc("day", F.col(ts_col)).cast("date")
-    series = (
+    series = pin(
         df.where(F.col(ts_col).isNotNull() & F.col(value_col).isNotNull())
         .groupBy(day.alias("d"))
         .agg(F.avg(F.col(value_col).cast("double")).alias("x"))
         .withColumn("dow", F.dayofweek("d").cast("long"))
-        .persist()
     )
     dow_means = series.groupBy("dow").agg(F.avg("x").alias("dow_mean"))
     resid = series.join(F.broadcast(dow_means), "dow").withColumn(
@@ -4748,7 +4720,7 @@ def grouped_theil_sen(
     Returns ``(group, n_days, n_pairs, slope_per_day)``.
     """
     day = F.date_trunc("day", F.col(ts_col)).cast("date")
-    series = (
+    series = pin(
         df.where(
             F.col(ts_col).isNotNull()
             & F.col(value_col).isNotNull()
@@ -4756,7 +4728,6 @@ def grouped_theil_sen(
         )
         .groupBy(F.col(group_col).alias("g"), day.alias("d"))
         .agg(F.avg(F.col(value_col).cast("double")).alias("x"))
-        .persist()
     )
     a = series.select(
         "g", F.col("d").alias("d1"), F.col("x").alias("x1")
@@ -5420,7 +5391,7 @@ def conformal_intervals(
     # and the n_train count from cache — the unpersisted form re-read
     # the fact table once per split materialization PLUS once per
     # residuals() subplan's embedded model aggregate (~5 scans, r8)
-    base = df.where(
+    base = pin(df.where(
         F.col(feature_col).isNotNull()
         & F.col(target_col).isNotNull()
         & F.col(id_col).isNotNull()
@@ -5428,12 +5399,12 @@ def conformal_intervals(
         F.col(feature_col).alias("x"),
         y_e2.alias("y_e2"),
         (hash_bucket_expr(F.col(id_col), ":conformal", 4)).alias("b"),
-    ).persist()
+    ))
     train = base.where(F.col("b") < 2)
     # |feature groups| rows, read by BOTH residuals() subplans
-    model = train.groupBy("x").agg(
+    model = pin(train.groupBy("x").agg(
         F.sum("y_e2").alias("sy"), F.count(F.lit(1)).alias("ny")
-    ).persist()
+    ))
     pred = (F.col("sy") / F.col("ny")).alias("pred_e2")
 
     def residuals(split: DataFrame) -> DataFrame:
@@ -5448,7 +5419,7 @@ def conformal_intervals(
             )
         )
 
-    cal = residuals(base.where(F.col("b") == 2)).persist()
+    cal = pin(residuals(base.where(F.col("b") == 2)))
     # ev is consumed exactly once (the final coverage aggregate) and
     # its inputs (base, model) are cached — persisting it only added a
     # cache write for a frame never re-read
@@ -5913,7 +5884,7 @@ def theil_decomposition(
             F.sum(x * F.log(x)).alias("xlx_g"),
         )
     )
-    g = g.persist()
+    g = pin(g)
     tot = g.agg(
         F.sum("n_g").alias("n"),
         F.sum("s_g").alias("s"),

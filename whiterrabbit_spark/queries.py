@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from whiterrabbit_spark.cache import pin
 from whiterrabbit_spark.config import ScanConfig
 from whiterrabbit_spark.extensions import dedup as X
 from whiterrabbit_spark.extensions import similarity as sim
@@ -3988,12 +3989,12 @@ def _ann_ivf_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = read_parquet_table(spark, sf_dir, "embeddings")
     idx = tempfile.mkdtemp(prefix="wrs_ivf_") + "/idx"
     sim.ivf_build_index(emb, idx, n_lists=16, seed=ANN_LSH_SEED)
-    queries = emb.limit(20).selectExpr(
+    queries = pin(emb.limit(20).selectExpr(
         "vec_id as query_id", "embedding"
-    ).persist()
-    disk = sim.ivf_query_index(spark, idx, queries, k=5, n_probe=4).select(
+    ))
+    disk = pin(sim.ivf_query_index(spark, idx, queries, k=5, n_probe=4).select(
         "query_id", "neighbor_id"
-    ).persist()
+    ))
     mem = sim.ivf_topk(
         emb, queries, k=5, n_lists=16, n_probe=4, seed=ANN_LSH_SEED
     ).select("query_id", F.col("neighbor_id").alias("mn"))
@@ -6225,9 +6226,9 @@ def _ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persisted: the brute side is a full GEMM corpus pass and feeds
     # BOTH the overlap join and the per-query size aggregate — without
     # the cache it would execute twice
-    brute = sim.cosine_topk_blocked(df, q, k=5).select(
+    brute = pin(sim.cosine_topk_blocked(df, q, k=5).select(
         "query_id", "neighbor_id"
-    ).persist()
+    ))
     ann = sim.random_hyperplane_ann(
         df, q, dim=EMB_DIM, k=5,
         n_planes=ANN_LSH_PLANES, n_tables=ANN_LSH_TABLES, seed=ANN_LSH_SEED,
@@ -7293,10 +7294,9 @@ def _minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle recomputes both in SQL, so the recall itself is cross-engine
     verified."""
     docs = read_parquet_table(spark, sf_dir, "documents")
-    exact = (
+    exact = pin(
         X.ngram_jaccard_pairs(docs, "text", "doc_id", k=3, threshold=0.5)
         .select("id1", "id2")
-        .persist()
     )
     lsh = X.minhash_dedup_pairs(
         docs, "text", "doc_id", k=3, num_hashes=32,
@@ -7764,11 +7764,10 @@ def _segment_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = read_parquet_table(spark, sf_dir, "events")
     sk = segment_overlap_sketch(ev, "event_type", "user_id")
 
-    base = (
+    base = pin(
         ev.where(F.col("event_type").isNotNull() & F.col("user_id").isNotNull())
         .select("event_type", "user_id")
         .distinct()
-        .persist()
     )
     a = base.select(F.col("event_type").alias("segment_1"), "user_id")
     b = base.select(F.col("event_type").alias("segment_2"), "user_id")
@@ -11669,7 +11668,7 @@ def _retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(F.col("doc_id").alias("rel_id"))
     # the relevance set feeds three consumers (count + one semi-join
     # per ranked list); pinned so the corpus scan happens once
-    rel = rel.localCheckpoint(eager=True)
+    rel = pin(rel, checkpoint=True)
     n_rel = rel.agg(F.count(F.lit(1)).alias("n_relevant"))
 
     def ranked(df: DataFrame, score_col: str, id_out: str) -> DataFrame:

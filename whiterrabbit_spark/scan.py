@@ -17,11 +17,11 @@ independent file scans overlap on the cluster.
 from __future__ import annotations
 
 import os
-from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 
 from whiterrabbit_spark import io as wio
+from whiterrabbit_spark.cache import ThreadPool, pin
 from whiterrabbit_spark.config import ScanConfig
 from whiterrabbit_spark.frequency import value_frequencies
 from whiterrabbit_spark.infer import infer_and_cast
@@ -104,7 +104,7 @@ def scan_file(
         df = exact_random_sample(df, cfg.max_rows, total_rows=data_rows, cfg=cfg)
         # cache: the sampled frame feeds inference + profile + frequency;
         # re-sampling per job would both re-read and re-randomize.
-        df = df.cache()
+        df = pin(df)
         n_rows_checked = df.count()
     else:
         n_rows_checked = data_rows
@@ -143,8 +143,7 @@ def scan_file(
         # over a lazy persist RACE — each computed (re-read + re-parsed)
         # the raw file before any cache block existed (the r8 50M smoke
         # measured 2 extra full-file passes from exactly this).
-        typed = typed.persist()
-        typed.count()
+        typed = pin(typed, eager=True)
 
     summary_all, raw = profile_table(
         typed, cfg, table_name=os.path.basename(path), row_hint=n_rows_checked
@@ -196,7 +195,7 @@ def scan_folder(
     cfg = cfg or ScanConfig()
     tables = wio.discover_tables(working_folder, cfg.delimiter, cfg.source_format)
     if max_parallel_files > 1 and len(tables) > 1:
-        with ThreadPoolExecutor(max_workers=max_parallel_files) as pool:
+        with ThreadPool(max_workers=max_parallel_files) as pool:
             results = list(
                 pool.map(lambda t: scan_file(spark, t[1], cfg), tables)
             )
