@@ -3,6 +3,7 @@ multimodal plumbing."""
 
 from __future__ import annotations
 
+import math
 import uuid
 
 import pytest
@@ -5451,6 +5452,10 @@ def test_hyperplane_prescreen_recall_pinned_and_default_off(
         ).collect()
     }
     assert off == base
+    # the Hamming cut keeps at least the full 3σ slack at the threshold
+    f = math.acos(0.4) / math.pi
+    slack = 256 * f + 3.0 * math.sqrt(256 * f * (1.0 - f))
+    assert slack <= sim._prescreen_hmax(256, 0.4, 3.0) < slack + 1
     pre = {
         (r.id1, r.id2): r.cosine
         for r in sim.hyperplane_near_pairs(

@@ -64,9 +64,12 @@ def test_rare_only_column_empty_table(spark):
 
 def test_wide_table_melt_fallback_matches_branches(spark):
     """>64 columns triggers the melt plan; results must match the
-    per-column branch plan exactly. A double column holding 0.0 and -0.0
-    shows one zero row in both plans."""
+    per-column branch plan exactly, for the frequency table and for the
+    profile's distinct counts and quartiles, which read the same
+    histogram. A double column holding 0.0 and -0.0 shows one zero row
+    in both plans."""
     import whiterrabbit_spark.frequency as freq
+    from whiterrabbit_spark.profile import profile_table
 
     n_cols = 70
     zeros = [0.0, -0.0, 1.0, -0.0]
@@ -92,15 +95,32 @@ def test_wide_table_melt_fallback_matches_branches(spark):
             for r in out.collect()
         )
 
+    def stats(threshold):
+        # three of the columns: the profile's branch form costs a stage
+        # per column
+        freq._MELT_THRESHOLD = threshold
+        summary, _ = profile_table(df.select("c0", "c1", "z"), cfg)
+        return {
+            r["column_name"]: (r["distinct_count"], r["q1_val"], r["median_val"], r["q3_val"])
+            for r in summary.collect()
+        }
+
     # force the branch path on the same data for comparison
     old = freq._MELT_THRESHOLD
     freq._MELT_THRESHOLD = 1_000
     try:
         branches = value_frequencies(df, cfg=cfg)
         assert key(wide) == key(branches)
+        melt_stats, branch_stats = stats(0), stats(1_000)
     finally:
         freq._MELT_THRESHOLD = old
     assert key(wide), "expected non-empty frequency output"
+    # z = 0.0 ×30, 1.0 ×10; the string columns hold v0, v1, v2
+    assert melt_stats == branch_stats == {
+        "c0": (3, None, None, None),
+        "c1": (3, None, None, None),
+        "z": (2, 0.0, 0.0, 0.25),
+    }
 
 
 def test_grouped_value_frequencies(spark):
@@ -126,6 +146,14 @@ def test_grouped_value_frequencies(spark):
         by_grp.setdefault(r.grp, 0.0)
         by_grp[r.grp] += r.percentage
     assert all(abs(v - 1.0) < 1e-9 for v in by_grp.values())
+    # -0.0 and 0.0 count as one value, as in value_frequencies
+    zdf = spark.createDataFrame(
+        [("a", z) for z in [0.0, -0.0, 1.0, -0.0] * 3], "grp string, z double"
+    )
+    out3 = grouped_value_frequencies(zdf, "grp", ["z"], ScanConfig(min_cell_count=1))
+    assert sorted((r.value, r["count"]) for r in out3.collect()) == [
+        ("0.0", 9), ("1.0", 3)
+    ]
 
 
 def test_mask_profile(spark):

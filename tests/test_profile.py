@@ -10,6 +10,7 @@ import duckdb
 import pytest
 
 from tests.conftest import SF_DIR
+from whiterrabbit_spark import frequency as freq
 from whiterrabbit_spark.config import ScanConfig
 from whiterrabbit_spark.profile import all_empty_fields, profile_table
 
@@ -80,23 +81,24 @@ def test_string_columns_have_no_numeric_stats(lineitem_summary):
     )[0]
 
 
-def test_empty_vs_missing_and_all_empty(spark):
+def test_empty_vs_missing_and_all_empty(spark, monkeypatch):
     df = spark.createDataFrame(
         [("", None, "x", 0.0), ("", None, "", -0.0), ("", None, None, 1.0)],
         "all_empty string, all_na string, mixed string, zeros double",
     )
-    summary, raw = profile_table(df, CFG, table_name="t")
-    rows = {r["column_name"]: r.asDict() for r in summary.collect()}
-    assert rows["all_empty"]["empty_count"] == 3
-    assert rows["all_empty"]["missing_count"] == 0
-    assert rows["all_na"]["missing_count"] == 3
-    assert rows["mixed"]["non_missing_count"] == 1
-    assert set(all_empty_fields(raw)) == {"all_empty", "all_na"}
-    # one zero on both sides of small_table_rows (melt and per-column
-    # histograms), as the reference's R unique() counts it
-    for row_hint in (3, CFG.small_table_rows + 1):
-        summary, _ = profile_table(df, CFG, table_name="t", row_hint=row_hint)
+    # both sides of _MELT_THRESHOLD: per-column and melt histograms
+    for threshold in (freq._MELT_THRESHOLD, 0):
+        monkeypatch.setattr(freq, "_MELT_THRESHOLD", threshold)
+        summary, raw = profile_table(df, CFG, table_name="t")
         rows = {r["column_name"]: r.asDict() for r in summary.collect()}
+        assert rows["all_empty"]["empty_count"] == 3
+        assert rows["all_empty"]["missing_count"] == 0
+        assert rows["all_empty"]["distinct_count"] == 0
+        assert rows["all_na"]["missing_count"] == 3
+        assert rows["mixed"]["non_missing_count"] == 1
+        assert rows["mixed"]["distinct_count"] == 1
+        assert set(all_empty_fields(raw)) == {"all_empty", "all_na"}
+        # one zero, as the reference's R unique() counts it
         assert rows["zeros"]["distinct_count"] == 2
 
 

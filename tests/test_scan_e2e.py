@@ -55,6 +55,16 @@ def test_scan_freq_present(spark, workdir):
     freq = {(r["column_name"], r["value"]): r["count"] for r in res.frequencies.collect()}
     assert any(k[0] == "category" for k in freq)
     assert not any(k[0] == "iso_date" for k in freq)  # date cols skipped
+    # the table reads the histogram the profile grouped and pinned: every
+    # leaf of its plan is that cached relation, none a source scan
+    leaves = res.frequencies._jdf.queryExecution().optimizedPlan().collectLeaves()
+    leaves = [leaves.apply(i) for i in range(leaves.size())]
+    assert leaves
+    for leaf in leaves:
+        assert leaf.getClass().getSimpleName() == "InMemoryRelation"
+        out = leaf.output()
+        names = [out.apply(i).name() for i in range(out.size())]
+        assert names == ["column_name", "value", "num", "count"]
 
 
 def test_sampling_caps_rows(spark, workdir):

@@ -85,10 +85,6 @@ class ScanConfig:
     # at scale, it just pays a row-explosion CPU cost that only wins when
     # plan count dominates — i.e. very wide tables
     wide_infer_cols: int = 200
-    # below this many rows, the exact distinct+percentile pass collapses to
-    # one melt job (job-scheduling overhead beats per-column scans on tiny
-    # files — the many-small-files folder case)
-    small_table_rows: int = 200_000
     round_digits: int = 6               # stat rounding for stable comparisons
 
     @property

@@ -649,11 +649,10 @@ def _prescreen_hmax(bits: int, threshold: float, margin: float) -> int:
     random-hyperplane collision law); ``margin`` binomial standard
     deviations of slack bound the per-pair false-drop probability (the
     one-sided normal tail: margin 3 ⇒ ≲0.1% for a pair exactly at the
-    threshold; pairs above it have smaller θ and drop even less)."""
-    import math as _math
-
-    f = _math.acos(min(max(threshold, -1.0), 1.0)) / _math.pi
-    return int(bits * f + margin * _math.sqrt(bits * f * (1.0 - f)))
+    threshold; pairs above it have smaller θ and drop even less). Rounded
+    up, so the slack is never less than ``margin`` deviations."""
+    f = math.acos(min(max(threshold, -1.0), 1.0)) / math.pi
+    return math.ceil(bits * f + margin * math.sqrt(bits * f * (1.0 - f)))
 
 
 def _psig_hamming(a: Column, b: Column) -> Column:

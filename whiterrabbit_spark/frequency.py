@@ -12,15 +12,19 @@ Reference semantics preserved:
   truncated) rows only** (W:344) — percentages sum to 1.0 over the emitted
   table, not over the data. Quirk kept.
 
-Scale shape: one plan with an independent branch per eligible column —
-each branch is ``groupBy(value).count → HAVING → orderBy+limit`` which
-Catalyst executes as a partial-agg shuffle followed by
-TakeOrderedAndProject (distributed top-K, no full sort). Branches union
-into one job, so the scan is shared-scheduled and the post-agg windows
-(displayed-denominator percentage) run on ≤ columns×maxDistinct rows.
-Measured ~4× faster than the melt (explode struct) single-shuffle form,
-which remains the fallback for very wide tables (> ``_MELT_THRESHOLD``
-columns) where a union plan would explode analysis time.
+Scale shape: the counts come from ``value_histogram``, the one grouping
+of a column's values that the profile's distinct counts and quartiles
+read too; ``value_frequencies`` adds only the F1 finish. Up to
+``_MELT_THRESHOLD`` columns the histogram is one branch per column, each
+``groupBy(value).count`` (a partial-agg shuffle), unioned into one job;
+built for the table alone, each branch takes its top-K with
+``orderBy+limit``, which Catalyst runs as TakeOrderedAndProject
+(distributed top-K, no full sort). Measured ~4× faster than the melt
+(explode struct) single-shuffle form, which wider tables use instead,
+where a union plan would explode analysis time. Over the melt, or over
+a histogram the caller already grouped (a scan's pinned one), the top-K
+is one rank window over the counts. The displayed-denominator
+percentage runs on ≤ columns×maxDistinct rows.
 """
 
 from __future__ import annotations
@@ -49,85 +53,117 @@ def fold_signed_zero(c: Column, dt: T.DataType) -> Column:
     return c
 
 
+def _cells(c: str, dt: T.DataType) -> tuple[Column, Column]:
+    """A column's histogram value (folded, stringified) and its quartile
+    key: the double value, epoch seconds for a date, NULL otherwise."""
+    v = fold_signed_zero(F.col(c), dt)
+    if isinstance(dt, T.NumericType):
+        num = v.cast("double")
+    elif not _eligible(dt):
+        num = v.cast("timestamp").cast("double")
+    else:
+        num = F.lit(None).cast("double")
+    return v.cast("string"), num
+
+
+def _count(cells: DataFrame, *keys: str) -> DataFrame:
+    # stringified values are canonical: distinct strings == distinct values
+    return (
+        cells.where(F.col("value").isNotNull() & (F.col("value") != ""))
+        .groupBy(*keys, "value")
+        .agg(F.first("num").alias("num"), F.count(F.lit(1)).alias("count"))
+    )
+
+
+def value_histogram(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
+    """One row per (column, non-empty value): ``column_name``, ``value``,
+    ``num`` (the quartile key, see ``_cells``) and ``count``.
+
+    Up to ``_MELT_THRESHOLD`` columns: one ``groupBy(value)`` branch per
+    column, unioned. Wider: one explode-struct melt and one
+    ``groupBy(column_name, value)`` shuffle.
+    """
+    columns = df.columns if columns is None else columns
+    if not columns:
+        return df.sparkSession.createDataFrame(
+            [], "column_name string, value string, num double, count long"
+        )
+    if len(columns) > _MELT_THRESHOLD:
+        return _melt_histogram(df, columns)
+    branches = []
+    for c in columns:
+        v, num = _cells(c, df.schema[c].dataType)
+        branches.append(
+            _count(df.select(v.alias("value"), num.alias("num")))
+            .select(F.lit(c).alias("column_name"), "value", "num", "count")
+        )
+    return reduce(DataFrame.unionByName, branches)
+
+
+def _melt_histogram(df: DataFrame, columns: list[str]) -> DataFrame:
+    """``value_histogram``'s wide form: one scan reads every column."""
+    kv = []
+    for c in columns:
+        v, num = _cells(c, df.schema[c].dataType)
+        kv.append(F.struct(F.lit(c).alias("column_name"), v.alias("value"), num.alias("num")))
+    melted = df.select(F.explode(F.array(*kv)).alias("kv")).select("kv.*")
+    return _count(melted, "column_name")
+
+
 def value_frequencies(
     df: DataFrame,
     columns: list[str] | None = None,
     cfg: ScanConfig | None = None,
+    histogram: DataFrame | None = None,
 ) -> DataFrame:
     """Frequency frame: (column_name, value, count, percentage).
 
     ``columns`` defaults to every frequency-eligible (non-date) column.
+    ``histogram`` is a ``value_histogram`` covering at least those
+    columns; one is built when it is not given.
     """
     cfg = cfg or ScanConfig()
-    if columns is None:
-        columns = [f.name for f in df.schema.fields if _eligible(f.dataType)]
-    else:
-        types = {f.name: f.dataType for f in df.schema.fields}
-        columns = [c for c in columns if _eligible(types[c])]
+    types = {f.name: f.dataType for f in df.schema.fields}
+    columns = df.columns if columns is None else columns
+    columns = [c for c in columns if _eligible(types[c])]
     if not columns:
         return df.sparkSession.createDataFrame(
             [],
             "column_name string, value string, count long, percentage double",
         )
 
-    if len(columns) > _MELT_THRESHOLD:
-        retained = _melt_counts(df, columns, cfg)
+    def counts(hist: DataFrame, cols: list[str]) -> DataFrame:
+        return hist.select("column_name", "value", "count").where(
+            F.col("column_name").isin(cols) & (F.col("count") >= cfg.min_cell_count)
+        )
+
+    order = [F.col("count").desc(), F.col("value").asc()]
+    if histogram is None and len(columns) <= _MELT_THRESHOLD:
+        # each branch groups only its own column, so the plan stays
+        # linear in the column count
+        retained = reduce(DataFrame.unionByName, [
+            counts(value_histogram(df, [c]), [c])
+            .orderBy(*order)
+            .limit(cfg.max_distinct_values)
+            for c in columns
+        ])
     else:
-        branches = []
-        for c in columns:
-            v = fold_signed_zero(F.col(c), df.schema[c].dataType).cast("string")
-            branches.append(
-                df.select(v.alias("value"))
-                .where(v.isNotNull() & (v != ""))
-                .groupBy("value")
-                .agg(F.count(F.lit(1)).alias("count"))
-                .where(F.col("count") >= cfg.min_cell_count)
-                .orderBy(F.col("count").desc(), F.col("value").asc())
-                .limit(cfg.max_distinct_values)
-                .select(F.lit(c).alias("column_name"), "value", "count")
-            )
-        retained = reduce(DataFrame.unionByName, branches)
+        # a given histogram is read once, not once per column
+        hist = histogram if histogram is not None else value_histogram(df, columns)
+        w_rank = Window.partitionBy("column_name").orderBy(*order)
+        retained = (
+            counts(hist, columns)
+            .withColumn("__rn", F.row_number().over(w_rank))
+            .where(F.col("__rn") <= cfg.max_distinct_values)
+            .drop("__rn")
+        )
 
     w_all = Window.partitionBy("column_name")
     return (
         retained.withColumn(
             "percentage", F.col("count") / F.sum("count").over(w_all)
         )
-        .orderBy("column_name", F.col("count").desc(), F.col("value").asc())
-    )
-
-
-def _melt_counts(df: DataFrame, columns: list[str], cfg: ScanConfig) -> DataFrame:
-    """Wide-table fallback: single explode(struct) melt → one
-    groupBy(column, value) shuffle → windowed top-K."""
-    melted = df.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(c).alias("column_name"),
-                        fold_signed_zero(F.col(c), df.schema[c].dataType)
-                        .cast("string").alias("value"),
-                    )
-                    for c in columns
-                ]
-            )
-        ).alias("kv")
-    ).select("kv.column_name", "kv.value")
-
-    counts = (
-        melted.where(F.col("value").isNotNull() & (F.col("value") != ""))
-        .groupBy("column_name", "value")
-        .agg(F.count(F.lit(1)).alias("count"))
-        .where(F.col("count") >= cfg.min_cell_count)
-    )
-    w_rank = Window.partitionBy("column_name").orderBy(
-        F.col("count").desc(), F.col("value").asc()
-    )
-    return (
-        counts.withColumn("__rn", F.row_number().over(w_rank))
-        .where(F.col("__rn") <= cfg.max_distinct_values)
-        .drop("__rn")
+        .orderBy("column_name", *order)
     )
 
 
@@ -147,8 +183,9 @@ def salted_value_counts(
     single reducer's input across ``salt_buckets`` tasks, at the cost of a
     second (tiny) shuffle over ≤ distinct×buckets rows.
 
-    Same result as ``groupBy(value).count()`` — parity-tested; plug into
-    ``finish_frequency_table``-style postprocessing for the full F1 shape.
+    Same result as ``groupBy(value).count()`` — parity-tested. It stops
+    at the counts: the F1 finish (HAVING, top-K, displayed-denominator
+    percentage) lives in ``value_frequencies``.
     """
     salted = (
         df.select(F.col(column).alias("value"))
@@ -231,7 +268,8 @@ def grouped_value_frequencies(
                 *[
                     F.struct(
                         F.lit(c).alias("column_name"),
-                        F.col(c).cast("string").alias("value"),
+                        fold_signed_zero(F.col(c), df.schema[c].dataType)
+                        .cast("string").alias("value"),
                     )
                     for c in columns
                 ]

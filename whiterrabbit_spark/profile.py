@@ -7,23 +7,23 @@ table in a fixed small number of scans (the reference iterates
 column-at-a-time over an in-memory table; at 100 TB we must not scan once
 per column — SURVEY §3.2).
 
-Execution shape (exact mode) — two overlapped job sets:
+Execution shape (exact mode) — two overlapped jobs:
 
 1. **Simple aggregates** (count/missing/empty/min/max/mean/sd): one
    ``df.agg`` over all columns. Every expression partial-aggregates
    map-side, so the final global reduce handles one tiny row per partition.
-2. **Exact distinct + exact percentiles, from one histogram per column**:
-   ``groupBy(value).count()`` (map-side dedup, single-column shuffle), then
-   distinct = histogram row count and median/Q1/Q3 =
-   ``percentile(value, p, frequency=count)`` — type-7 interpolation over
-   the expanded multiset, bit-identical to a percentile over raw rows, but
-   the final task buffers |distinct| entries instead of |rows|. One job
-   per column, thread-submitted; parquet column pruning keeps total IO at
-   one full-scan equivalent. (A naive multi-``count_distinct`` global agg
-   triggers Expand (rows × columns) and funnels everything into one final
-   task — avoided.)
+2. **Exact distinct + exact percentiles, from the value histogram**
+   (``frequency.value_histogram``, the same counts the F1 frequency table
+   reads — a scan shares one pinned histogram between both): one
+   ``groupBy(column_name)`` collect over it, distinct = histogram row
+   count and median/Q1/Q3 = ``percentile(num, p, frequency=count)`` —
+   type-7 interpolation over the expanded multiset, bit-identical to a
+   percentile over raw rows, but the final task buffers |distinct|
+   entries instead of |rows|. (A naive multi-``count_distinct`` global
+   agg triggers Expand (rows × columns) and funnels everything into one
+   final task — avoided.)
 
-With ``cfg.approx`` (the 100 TB switch) job set 2 folds back into job 1 as
+With ``cfg.approx`` (the 100 TB switch) job 2 folds back into job 1 as
 ``approx_count_distinct`` / ``percentile_approx`` — everything
 partial-aggregable, one scan, no value buffering.
 
@@ -63,7 +63,7 @@ from pyspark.sql import types as T
 from whiterrabbit_spark import scale
 from whiterrabbit_spark.cache import ThreadPool, cache_scope, memo, pin
 from whiterrabbit_spark.config import ScanConfig
-from whiterrabbit_spark.frequency import fold_signed_zero
+from whiterrabbit_spark.frequency import value_histogram
 from whiterrabbit_spark.infer import nonempty
 
 SUMMARY_SCHEMA = T.StructType(
@@ -153,116 +153,6 @@ def _column_exprs(name: str, dt: T.DataType, cfg: ScanConfig) -> list:
     return exprs
 
 
-def _exact_distinct_and_percentiles(
-    df: DataFrame, fields: list
-) -> tuple[dict[str, int], dict[str, list]]:
-    """Job set 2: per-column exact distinct count AND exact type-7
-    quartiles, both derived from one value histogram per column.
-
-    ``groupBy(value).count()`` dedups map-side (the shuffle carries one
-    typed column, partial-aggregated); the exact distinct is the histogram
-    row count, and the exact percentiles come from
-    ``percentile(value, p, frequency=count)`` over the histogram — the
-    type-7 interpolation over the expanded multiset, identical to a
-    percentile over the raw rows (verified against the raw form), but the
-    final task buffers |distinct values| entries instead of |rows|.
-    One job per column, submitted concurrently: parquet column pruning
-    makes the k scans IO-equivalent to one full scan. ``cfg.approx`` is
-    the single-scan sketch path for 100 TB runs.
-    """
-
-    def one(f) -> tuple[str, int, list | None]:
-        c = F.col(f.name)
-        cond = nonempty(c) if isinstance(f.dataType, T.StringType) else c.isNotNull()
-        hist = (
-            df.select(c.alias("v")).where(cond)
-            .groupBy("v").agg(F.count(F.lit(1)).alias("cnt"))
-        )
-        aggs = [F.count(F.lit(1)).alias("distinct")]
-        if _is_numeric(f.dataType):
-            aggs.append(
-                F.percentile(
-                    F.col("v").cast("double"), F.lit([0.25, 0.5, 0.75]), F.col("cnt")
-                ).alias("q")
-            )
-        elif _is_date(f.dataType):
-            aggs.append(
-                F.percentile(
-                    F.col("v").cast("timestamp").cast("double"),
-                    F.lit([0.25, 0.5, 0.75]),
-                    F.col("cnt"),
-                ).alias("q")
-            )
-        row = hist.agg(*aggs).collect()[0].asDict()
-        q = row.get("q")
-        return f.name, row["distinct"], (list(q) if q is not None else None)
-
-    with ThreadPool(max_workers=min(len(fields), 12) or 1) as pool:
-        out = list(pool.map(one, fields))
-    return (
-        {name: d for name, d, _ in out},
-        {name: q for name, _, q in out if q is not None},
-    )
-
-
-def _exact_distinct_and_percentiles_melt(
-    df: DataFrame, fields: list
-) -> tuple[dict[str, int], dict[str, list]]:
-    """Small-table variant of the histogram pass: ONE job for all columns.
-
-    Melts every column to (column, string_value, double_value) structs,
-    two-level-groups to the per-column value histogram, then aggregates
-    distinct counts + weighted type-7 percentiles per column group. Same
-    results as the per-column form (stringified doubles/timestamps are
-    canonical, so distinct-on-string == distinct-on-value); chosen below
-    ``ScanConfig.small_table_rows``. On local[32] the two forms measure
-    equal (the folder scan is scheduling-bound either way); the win is on
-    real clusters where per-job scheduling latency is 5-10× local — this
-    path submits ~5 jobs per small file instead of 4+n_cols.
-    """
-    entries = []
-    for f in fields:
-        # one zero, as the per-column form's groupBy on the double sees
-        c = fold_signed_zero(F.col(f.name), f.dataType)
-        if _is_numeric(f.dataType):
-            cond, dv = c.isNotNull(), c.cast("double")
-        elif _is_date(f.dataType):
-            cond, dv = c.isNotNull(), c.cast("timestamp").cast("double")
-        elif isinstance(f.dataType, T.StringType):
-            cond, dv = nonempty(c), F.lit(None).cast("double")
-        else:
-            cond, dv = c.isNotNull(), F.lit(None).cast("double")
-        entries.append(
-            F.when(
-                cond,
-                F.struct(
-                    F.lit(f.name).alias("c"),
-                    c.cast("string").alias("sv"),
-                    dv.alias("dv"),
-                ),
-            )
-        )
-    melted = (
-        df.select(F.explode(F.array(*entries)).alias("e"))
-        .where(F.col("e").isNotNull())
-        .select("e.c", "e.sv", "e.dv")
-    )
-    hist = melted.groupBy("c", "sv").agg(
-        F.count(F.lit(1)).alias("cnt"), F.first("dv").alias("dv")
-    )
-    rows = hist.groupBy("c").agg(
-        F.count(F.lit(1)).alias("distinct"),
-        F.percentile(F.col("dv"), F.lit([0.25, 0.5, 0.75]), F.col("cnt")).alias("q"),
-    ).collect()
-    distinct = {f.name: 0 for f in fields}
-    quarts: dict[str, list] = {}
-    for r in rows:
-        distinct[r["c"]] = r["distinct"]
-        if r["q"] is not None:
-            quarts[r["c"]] = list(r["q"])
-    return distinct, quarts
-
-
 def _fmt_ts(spark: SparkSession, epoch_or_ts: Any) -> str | None:
     """Driver-side timestamp → 'yyyy-MM-dd HH:mm:ss' (UTC session tz)."""
     if epoch_or_ts is None:
@@ -292,6 +182,7 @@ def profile_table(
     cfg: ScanConfig | None = None,
     table_name: str = "table",
     row_hint: int | None = None,
+    histogram: DataFrame | None = None,
 ) -> tuple[DataFrame, dict[str, dict]]:
     """One-pass profile of every column.
 
@@ -301,7 +192,8 @@ def profile_table(
     ``per_column_raw`` keeps the un-stringified aggregates (used by the
     overview's all-empty-field detection, W:294-303, which must run over
     ALL columns including excluded ones — exclusion is applied by the
-    caller when emitting, not here).
+    caller when emitting, not here). ``histogram`` is ``df``'s
+    ``value_histogram``, built here when not given.
     """
     cfg = cfg or ScanConfig()
     cfg = _resolve_approx(df, cfg, row_hint)
@@ -316,6 +208,13 @@ def profile_table(
         for f in chunk:
             exprs += _column_exprs(f.name, f.dataType, cfg)
         return df.agg(*exprs).collect()[0].asDict()
+
+    def run_histogram() -> list:
+        hist = histogram if histogram is not None else value_histogram(df)
+        return hist.groupBy("column_name").agg(
+            F.count(F.lit(1)).alias("distinct"),
+            F.percentile("num", F.lit([0.25, 0.5, 0.75]), F.col("count")).alias("q"),
+        ).collect()
 
     per_chunk = max(cfg.max_agg_exprs_per_job // 9, 1)
     if cfg.approx and len(fields) > _PROFILE_POOL_WIDTH:
@@ -339,21 +238,16 @@ def profile_table(
             per_chunk, max(1, -(-len(fields) // _PROFILE_POOL_WIDTH))
         )
     chunks = _chunk(fields, per_chunk)
-    # Job set 1 (per chunk) and job set 2 (per-column histograms) are
-    # independent — overlap them so the cluster stays busy instead of
-    # running serial barriers.
+    # The chunk aggregates and the histogram job are independent —
+    # overlap them so the cluster stays busy instead of running serial
+    # barriers.
     with ThreadPool(
         max_workers=min(len(chunks) + 1, _PROFILE_POOL_WIDTH)
     ) as pool:
         fut_chunks = [pool.submit(run_chunk, ch) for ch in chunks]
-        hist_fn = (
-            _exact_distinct_and_percentiles_melt
-            if (row_hint is not None and row_hint <= cfg.small_table_rows)
-            else _exact_distinct_and_percentiles
-        )
-        fut_hist = pool.submit(hist_fn, df, fields) if not cfg.approx else None
+        fut_hist = pool.submit(run_histogram) if not cfg.approx else None
         chunk_rows = [f.result() for f in fut_chunks]
-        distinct, quarts = fut_hist.result() if fut_hist else ({}, {})
+        hist_rows = fut_hist.result() if fut_hist else []
 
     for chunk, row in zip(chunks, chunk_rows):
         total = row[total_alias]
@@ -374,14 +268,15 @@ def profile_table(
             }
 
     if not cfg.approx:
+        stats = {r["column_name"]: r for r in hist_rows}
         for f in fields:
-            raw[f.name]["distinct"] = distinct.get(f.name, 0)
-            q = quarts.get(f.name)
-            if q is not None:
+            r = stats.get(f.name)
+            raw[f.name]["distinct"] = r["distinct"] if r else 0
+            if r and r["q"] is not None:
                 if _is_date(f.dataType):
-                    raw[f.name]["median_epoch"] = q[1]
+                    raw[f.name]["median_epoch"] = r["q"][1]
                 else:
-                    raw[f.name]["quartiles"] = q
+                    raw[f.name]["quartiles"] = list(r["q"])
 
     rows = []
     for f in fields:

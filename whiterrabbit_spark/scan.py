@@ -5,9 +5,15 @@ Per file (reference scan_file, whiteRRabbit.R:218-446):
   2. all-string read (+ seeded exact-N sample when over max_rows, W:225-272)
   3. type inference numeric→date (W:274-280)
   4. optional ±5 day date shift (W:282-291)
-  5. ONE wide aggregation for all per-column stats incl. the pre-exclusion
-     all-empty-field scan (W:293-303, W:309-423)
-  6. one melted frequency job (W:329-352)
+  5. one value histogram per column (frequency.value_histogram): the
+     non-empty values' counts, grouped once per table
+  6. ONE wide aggregation for all per-column stats incl. the pre-exclusion
+     all-empty-field scan (W:293-303, W:309-423), overlapped with one
+     job that reads the exact distinct counts and quartiles off the
+     histogram (W:327, W:368-374)
+  7. the frequency table (W:329-352): HAVING, top-K and percentage over
+     the same histogram, pinned so that it is grouped only once (an
+     unsampled quarantined read keeps two groupings, see scan_file)
 
 Across files the reference loops sequentially (W:450-464) — its biggest
 scaling flaw. Here each file's jobs are submitted from a thread pool so
@@ -23,10 +29,14 @@ from pyspark.sql import DataFrame, SparkSession
 from whiterrabbit_spark import io as wio
 from whiterrabbit_spark.cache import ThreadPool, pin
 from whiterrabbit_spark.config import ScanConfig
-from whiterrabbit_spark.frequency import value_frequencies
+from whiterrabbit_spark.frequency import (
+    _melt_histogram, value_frequencies, value_histogram,
+)
 from whiterrabbit_spark.infer import infer_and_cast
 from whiterrabbit_spark.overview import FileScanResult, build_overview
-from whiterrabbit_spark.profile import all_empty_fields, profile_table
+from whiterrabbit_spark.profile import (
+    _resolve_approx, all_empty_fields, profile_table,
+)
 from whiterrabbit_spark.sampling import exact_random_sample
 from whiterrabbit_spark.shift import shift_dates
 
@@ -57,6 +67,10 @@ def scan_file(
 ) -> FileScanResult:
     cfg = cfg or ScanConfig()
     fmt = cfg.source_format
+    # a quarantined read parsed for fewer than all of its columns keeps
+    # its malformed rows (CSV column pruning skips the field-count check)
+    # until a pin holds one parse of every column
+    partial_parse_keeps_bad_rows = False
     if fmt in ("parquet", "orc"):
         # Typed columnar sources: schema is authoritative — no all-string
         # read, no inference pass. Row count replaces the line count
@@ -95,6 +109,7 @@ def scan_file(
             # line count — a heavily-malformed file would otherwise
             # undershoot max_rows and overstate n_rows_checked
             data_rows -= n_quarantined
+            partial_parse_keeps_bad_rows = True
         else:
             df = wio.read_all_string(
                 spark, path, cfg.sep, multiline=cfg.multiline
@@ -106,6 +121,7 @@ def scan_file(
         # re-sampling per job would both re-read and re-randomize.
         df = pin(df)
         n_rows_checked = df.count()
+        partial_parse_keeps_bad_rows = False
     else:
         n_rows_checked = data_rows
 
@@ -145,8 +161,25 @@ def scan_file(
         # measured 2 extra full-file passes from exactly this).
         typed = pin(typed, eager=True)
 
+    exact = not _resolve_approx(typed, cfg, n_rows_checked).approx
+    histogram = None
+    if exact and partial_parse_keeps_bad_rows:
+        # the frequency table's one-column branches count the malformed
+        # rows; until the reader drops them there too, the profile reads
+        # the melt, one scan of every column, and the two do not share
+        histogram = _melt_histogram(typed, typed.columns)
+    elif exact and cfg.scan_field_values:
+        # the exact profile and the frequency table read the same counts:
+        # group them once. A plain persist, so a reader after the scope
+        # closes recomputes it. AQE does not coalesce a cached plan's
+        # shuffle partitions, so coalesce here: one partition per core,
+        # not 256 per column for every reader to scan.
+        histogram = pin(
+            value_histogram(typed).coalesce(spark.sparkContext.defaultParallelism)
+        )
     summary_all, raw = profile_table(
-        typed, cfg, table_name=os.path.basename(path), row_hint=n_rows_checked
+        typed, cfg, table_name=os.path.basename(path), row_hint=n_rows_checked,
+        histogram=histogram,
     )
     n_fields = len(typed.columns)
     n_fields_empty = len(all_empty_fields(raw))
@@ -162,7 +195,10 @@ def scan_file(
         freq_source = typed
 
     freq = (
-        value_frequencies(freq_source, cfg=cfg)
+        value_frequencies(
+            freq_source, cfg=cfg,
+            histogram=None if partial_parse_keeps_bad_rows else histogram,
+        )
         if cfg.scan_field_values
         else None
     )
