@@ -200,3 +200,60 @@ def test_hex_numeric_leading_zeros(spark):
     typed, res = infer_and_cast(df, CFG)
     assert res.decisions["v"] == "double"
     assert [r.v for r in typed.collect()] == [16.0, 16.0, 0.0, -255.0]
+
+
+def _one_pass_frame(spark, n):
+    """``n`` rows covering every gate branch, in one partition (as a scan
+    hands inference its pinned sample or a small file's single split)."""
+    rows = [
+        (
+            # ≥80% compact yyyyMMdd numerals plus ISO dates: passes the
+            # numeric gate, fails the strict pass, never date-probed
+            "2021-03-04" if i % 10 == 0 else "202101%02d" % (i % 28 + 1),
+            # half compact, half ISO: fails the numeric gate, so the date
+            # count must include the compact numerals
+            ("2021-01-%02d" if i % 2 else "202101%02d") % (i % 28 + 1),
+            "2021-01-02" if i % 4 else "",  # date, >20% missing
+            None,  # all-empty
+            "0x%x" % i,  # hex numerals
+            "item %d" % i,  # free text
+            "2022-%02d-%02d" % (i % 12 + 1, i % 28 + 1),  # clean dates
+            str(i * 0.5),  # clean numerics
+        )
+        for i in range(n)
+    ]
+    schema = ("ymd_iso string, ymd_half string, gappy string, empty string, "
+              "hexv string, txt string, date string, num string")
+    return spark.createDataFrame(rows, schema).coalesce(1)
+
+
+def test_one_pass_decides_as_sampled_gate(spark):
+    # At row_hint <= 4 x inference_sample_size the gate's head slice is
+    # the whole frame, so one aggregate stands in for the gate and the
+    # full-column pass; it must decide exactly as the two-phase path.
+    cfg = ScanConfig(inference_sample_size=50)
+    want = {
+        "ymd_iso": "string", "ymd_half": "timestamp", "gappy": "string",
+        "empty": "string", "hexv": "double", "txt": "string", "date": "timestamp",
+        "num": "double",
+    }
+    sc = spark.sparkContext
+    for n in (200, 201):
+        df = _one_pass_frame(spark, n)
+        two_phase = infer_types(df, cfg)
+        group = f"one-pass-{n}"
+        sc.setJobGroup(group, group)
+        try:
+            hinted = infer_types(df, cfg, row_hint=n)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert hinted.decisions == two_phase.decisions == want
+        if n == 200:  # one-pass: one job over the one partition
+            assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+
+def test_one_pass_header_only_table(spark):
+    df = spark.createDataFrame([], "a string, b string")
+    for hint in (0, None):
+        res = infer_types(df, CFG, row_hint=hint)
+        assert res.decisions == {"a": "string", "b": "string"}

@@ -91,6 +91,50 @@ def test_report_sinks(spark, workdir, tmp_path):
     assert "File1freq" in names2 and "File2freq" not in names2
 
 
+def _jobs_run_by(spark, action, group):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_local_frame_round_trip(spark):
+    from pyspark.sql import types as T
+
+    from whiterrabbit_spark.overview import OVERVIEW_SCHEMA
+    from whiterrabbit_spark.profile import SUMMARY_SCHEMA
+    from whiterrabbit_spark.session import local_frame
+
+    s = T.StructType(
+        [T.StructField("x", T.DoubleType()), T.StructField("n", T.LongType())]
+    )
+    rows = local_frame(spark, [(1.5, 1), (None, None), (float("nan"), 3)], s).collect()
+    assert rows[0] == (1.5, 1)
+    assert rows[1].x is None and rows[1].n is None
+    assert rows[2].x != rows[2].x and rows[2].n == 3  # NaN, not NULL
+    for schema in (SUMMARY_SCHEMA, OVERVIEW_SCHEMA):
+        empty = local_frame(spark, [], schema)
+        assert empty.schema == schema  # non-nullable fields kept
+        assert empty.collect() == []
+    row = ("File1", "a.tsv", "No description", 2, 1, 1, 0)
+    assert local_frame(spark, [row], OVERVIEW_SCHEMA).schema == OVERVIEW_SCHEMA
+
+
+def test_summary_and_overview_are_local_relations(spark, workdir):
+    from whiterrabbit_spark.overview import build_overview
+
+    res = scan_file(spark, f"{workdir}/tiny.tsv", ScanConfig(max_rows=-1))
+    overview = build_overview(spark, [res])
+    for i, df in enumerate((res.summary, overview)):
+        plan = df._jdf.queryExecution().optimizedPlan()
+        assert plan.getClass().getSimpleName() == "LocalRelation"
+        assert _jobs_run_by(spark, df.collect, f"local-relation-{i}") == 0
+    assert overview.collect()[0]["file_name"] == "tiny.tsv"
+
+
 def test_shift_dates_bounded(spark, workdir):
     cfg = ScanConfig(max_rows=-1, shift_dates=True)
     plain = scan_file(spark, f"{workdir}/profile_mixed.tsv", ScanConfig(max_rows=-1))

@@ -36,8 +36,26 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from whiterrabbit_spark.config import ScanConfig
+from whiterrabbit_spark.session import local_frame
 
 _MELT_THRESHOLD = 64
+
+HISTOGRAM_SCHEMA = T.StructType(
+    [
+        T.StructField("column_name", T.StringType(), True),
+        T.StructField("value", T.StringType(), True),
+        T.StructField("num", T.DoubleType(), True),
+        T.StructField("count", T.LongType(), True),
+    ]
+)
+FREQUENCY_SCHEMA = T.StructType(
+    [
+        T.StructField("column_name", T.StringType(), True),
+        T.StructField("value", T.StringType(), True),
+        T.StructField("count", T.LongType(), True),
+        T.StructField("percentage", T.DoubleType(), True),
+    ]
+)
 
 
 def _eligible(dt: T.DataType) -> bool:
@@ -85,9 +103,7 @@ def value_histogram(df: DataFrame, columns: list[str] | None = None) -> DataFram
     """
     columns = df.columns if columns is None else columns
     if not columns:
-        return df.sparkSession.createDataFrame(
-            [], "column_name string, value string, num double, count long"
-        )
+        return local_frame(df.sparkSession, [], HISTOGRAM_SCHEMA)
     if len(columns) > _MELT_THRESHOLD:
         return _melt_histogram(df, columns)
     branches = []
@@ -127,10 +143,7 @@ def value_frequencies(
     columns = df.columns if columns is None else columns
     columns = [c for c in columns if _eligible(types[c])]
     if not columns:
-        return df.sparkSession.createDataFrame(
-            [],
-            "column_name string, value string, count long, percentage double",
-        )
+        return local_frame(df.sparkSession, [], FREQUENCY_SCHEMA)
 
     def counts(hist: DataFrame, cols: list[str]) -> DataFrame:
         return hist.select("column_name", "value", "count").where(

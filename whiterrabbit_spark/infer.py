@@ -24,6 +24,23 @@ Re-expresses the reference's two parser gates (whiteRRabbit.R):
 * Order quirk (W:275-279): numeric is attempted first — a ``"20230101"``
   column types as double and never reaches the date parser.
 
+Execution shape: the gate reads one head slice of
+``_SLICE_FACTOR × inference_sample_size`` rows (a numeric round, then a
+date round on the columns the numeric round did not pass), and one melted
+full-column aggregate (``_column_counts``) counts the exact rules for the
+surviving candidates. When the caller bounds the frame's rows
+(``row_hint``) at or below the slice, the slice would be the whole frame,
+so the gate's counts ARE the full counts (its numeric successes are the
+non-empty values minus the cast failures). One ``_column_counts`` pass
+over every string column then yields both the shortlist and the rules'
+inputs, and decides exactly as the two phases: one aggregate instead of
+a pinned slice, two gate rounds and a second full pass (one job over a
+one-partition frame, as a scan's sample or small file arrives). Its date count
+parses only values that fail the double cast or are 8 or 14 digits: a
+value both parses accept can only match a separator-free pattern
+(yyyyMMdd, yyyyMMddHHmmss) at its exact width, so numeric columns skip
+the 24-pattern parse and the count stays exact.
+
 Divergences (documented, SURVEY §1.3): the reference samples unseeded →
 borderline columns type nondeterministically; we seed. R ``as.numeric``
 accepts hex literals ("0x10"); Spark's double cast does not (pathological,
@@ -44,6 +61,10 @@ from whiterrabbit_spark.config import ScanConfig
 # len(DATE_PATTERNS)-branch coalesce, so ~16 columns keeps the generated
 # aggregate inside codegen method limits (empirical knee on wide tables)
 _GATE_COLS_PER_JOB = 16
+
+# the gate's head slice is this many times ``inference_sample_size`` rows:
+# oversampled so mostly-empty columns still see enough non-empty values
+_SLICE_FACTOR = 4
 
 # lubridate orders (whiteRRabbit.R:174-178), expanded to explicit Spark
 # datetime patterns. lubridate orders are separator-agnostic; we enumerate
@@ -81,6 +102,11 @@ def nonempty(c: Column) -> Column:
 
 
 _HEX_RE = r"^[+-]?0[xX]0*[0-9a-fA-F]{1,15}$"
+# the only shapes of a value that both the double cast and the date parse
+# accept: the separator-free patterns' exact widths (yyyyMMdd and
+# yyyyMMddHHmmss; the year of a strict parse is 4 digits unless signed,
+# and ``date_parse_expr`` wants a leading digit)
+_COMPACT_RE = r"^(\d{8}|\d{14})$"
 
 
 def numeric_cast_expr(c: Column) -> Column:
@@ -162,12 +188,15 @@ def _sample_gate(df: DataFrame, cols: list[str], cfg: ScanConfig) -> dict[str, d
     analogous to the reference's own nondeterministic borderline gate
     (unseeded sample, W:148/W:173), but deterministic here.
     """
-    # Oversample so mostly-empty columns still see enough non-empty values.
     # limit() collapses to ONE partition — repartition so the (expensive,
     # 24-pattern date) gate expressions evaluate with full parallelism
     # instead of on a single core.
     par = df.sparkSession.sparkContext.defaultParallelism
-    sample_df = df.select(cols).limit(cfg.inference_sample_size * 4).repartition(par)
+    sample_df = (
+        df.select(cols)
+        .limit(cfg.inference_sample_size * _SLICE_FACTOR)
+        .repartition(par)
+    )
 
     # Round 1 (cheap): non-empty + numeric-cast rates for every column.
     # Round 2 (expensive, len(DATE_PATTERNS)-branch coalesce per column):
@@ -263,17 +292,28 @@ def _sample_gate(df: DataFrame, cols: list[str], cfg: ScanConfig) -> dict[str, d
     return out
 
 
-def infer_types(df: DataFrame, cfg: ScanConfig | None = None) -> InferenceResult:
+def infer_types(
+    df: DataFrame, cfg: ScanConfig | None = None, row_hint: int | None = None
+) -> InferenceResult:
     """Decide 'double' / 'timestamp' / 'string' for every string column.
 
-    Two-phase: a seeded sample gate shortlists candidates (scale
-    optimization, reference's sample gate W:146-151/W:170-189), then ONE
-    full-column aggregation job evaluates the exact rules:
+    The exact rules (see the module doc):
 
     * double  iff non-empty values exist and none fail ``try_cast(double)``
       (equivalent to the reference's gate+strict-revert, see module doc)
     * else timestamp iff parse-success over ALL rows (missing counted as
       failures, quirk W:199) ≥ ``success_threshold``
+
+    Each is tried only on a column whose gate rate (its share of
+    non-empty values that parse, W:146-151/W:170-189) reaches the
+    threshold, and the date gate only on a column the numeric gate did
+    not pass (W:275-279). ``row_hint`` is an upper bound on ``df``'s
+    rows, when the caller has one. At or below the gate's head slice
+    (``_SLICE_FACTOR × inference_sample_size`` rows) the slice would be
+    the whole frame, so one aggregate over every string column yields the
+    gate's rates and the rules' counts at once. Otherwise two phases: the
+    sampled gate shortlists candidates, then ONE full-column aggregation
+    evaluates the rules on them.
     """
     cfg = cfg or ScanConfig()
     string_cols = [f.name for f in df.schema.fields if f.dataType.simpleString() == "string"]
@@ -281,40 +321,67 @@ def infer_types(df: DataFrame, cfg: ScanConfig | None = None) -> InferenceResult
     if not string_cols:
         return InferenceResult(decisions)
 
-    gate = _sample_gate(df, string_cols, cfg)
+    one_pass = (
+        row_hint is not None
+        and row_hint <= _SLICE_FACTOR * cfg.inference_sample_size
+    )
+    if one_pass:
+        full = _column_counts(df, string_cols, n_date=len(string_cols))
+        gate = {
+            c: {"ne": f["ne"], "num_ok": f["ne"] - f["num_fail"],
+                "date_ok": f["date_ok"]}
+            for c, f in full.items()
+        }
+    else:
+        gate = _sample_gate(df, string_cols, cfg)
     thr = cfg.success_threshold
-    num_candidates = [
-        c for c in string_cols
-        if gate[c]["ne"] > 0 and gate[c]["num_ok"] / gate[c]["ne"] >= thr
-    ]
+
+    def passes(c: str, ok: str) -> bool:
+        return gate[c]["ne"] > 0 and gate[c][ok] / gate[c]["ne"] >= thr
+
+    num_candidates = [c for c in string_cols if passes(c, "num_ok")]
+    # numeric-first precedence: a numeric-gated column is never date-probed
     date_candidates = [
         c for c in string_cols
-        if gate[c]["ne"] > 0 and gate[c]["date_ok"] / gate[c]["ne"] >= thr
+        if not passes(c, "num_ok") and passes(c, "date_ok")
     ]
-    if not num_candidates and not date_candidates:
-        return InferenceResult(decisions)
+    if not one_pass:
+        if not num_candidates and not date_candidates:
+            return InferenceResult(decisions)
+        # Phase B: the rules' counts for the surviving candidates only
+        date_probe = sorted(date_candidates)
+        full = _column_counts(
+            df, date_probe + sorted(num_candidates), n_date=len(date_probe)
+        )
+    return _decide(decisions, full, num_candidates, date_candidates, thr)
 
-    # Phase B: full-column pass for all surviving candidates as ONE
-    # melted job — the r8 50M×100-col CSV smoke caught the old chunked
-    # form (≤16 date candidates per job for codegen limits, chunks
-    # thread-parallel) issuing ceil(candidates/chunk) FULL file scans:
-    # a row-oriented source re-reads every byte per job no matter how
-    # few columns the job projects, so inference cost 3 extra 36 GB
-    # passes and the "sample + one full pass" scan contract read 6.3×
-    # the file. The melt (posexplode of only the candidate columns,
-    # partial-aggregated on __pos map-side) is O(1)-in-width, scans the
-    # file ONCE, and pays the 24-pattern date parse only on
-    # date-candidate positions (codegen And short-circuits, so the
-    # __pos guard skips the parse for numeric-only positions).
-    full: dict[str, dict] = {}
-    date_probe = sorted(date_candidates)
-    num_only = sorted(set(num_candidates) - set(date_candidates))
-    cand = date_probe + num_only
-    n_date = len(date_probe)
+
+def _column_counts(
+    df: DataFrame, cols: list[str], n_date: int
+) -> dict[str, dict]:
+    """The rules' counts per column, as ONE melted aggregate: ``total`` rows,
+    ``ne`` non-empty values, ``num_fail`` non-empty values the double cast
+    rejects and ``date_ok`` values the date parse accepts — the last for
+    the first ``n_date`` of ``cols`` only (0 for the rest), parsing only
+    the values the cast rejects or that have ``_COMPACT_RE``'s shape
+    (exact, see the module doc: on a one-partition 4000-row frame of 40
+    integer columns, probing every value took 13 s, this 0.6 s).
+
+    The r8 50M×100-col CSV smoke caught the old chunked form (≤16 date
+    columns per job for codegen limits, chunks thread-parallel) issuing
+    ceil(columns/chunk) FULL file scans: a row-oriented source re-reads
+    every byte per job no matter how few columns the job projects. The
+    melt (posexplode of only ``cols``, partial-aggregated on __pos
+    map-side) is O(1)-in-width, scans the file ONCE, and pays the
+    24-pattern date parse only on the probed positions (codegen And
+    short-circuits, so the __pos guard skips the parse for the rest).
+    A zero-row frame melts to no groups: its columns read all zero.
+    """
     v = F.col("__val")
     pos = F.col("__pos")
+    out = {c: {"total": 0, "ne": 0, "num_fail": 0, "date_ok": 0} for c in cols}
     for r in (
-        _posmelt(df, cand)
+        _posmelt(df, cols)
         .groupBy("__pos")
         .agg(
             F.count(F.lit(1)).alias("total"),
@@ -324,52 +391,34 @@ def infer_types(df: DataFrame, cfg: ScanConfig | None = None) -> InferenceResult
             ).alias("num_fail"),
             F.count(
                 F.when(
-                    (pos < n_date) & date_parse_expr(v).isNotNull(), 1
+                    (pos < n_date)
+                    & (numeric_cast_expr(v).isNull() | F.trim(v).rlike(_COMPACT_RE))
+                    & date_parse_expr(v).isNotNull(),
+                    1,
                 )
             ).alias("date_ok"),
         )
         .collect()
     ):
         d = r.asDict()
-        c = cand[d.pop("__pos")]
-        # candidacy masks preserve the pre-r8 per-chunk shape exactly:
-        # counts a column's candidacy never asked for stay None
-        if c not in num_candidates:
-            d["ne"] = None
-            d["num_fail"] = None
-        if c not in date_candidates:
-            d["date_ok"] = None
-        full[c] = d
-    # an all-empty table melts to zero rows → no entry; keep the
-    # {"total": 0} sentinel so the decision loop skips it
-    for c in cand:
-        full.setdefault(
-            c, {"total": 0, "num_fail": None, "ne": None, "date_ok": None}
-        )
-    return _decide(string_cols, decisions, full, num_candidates, date_candidates, thr)
+        out[cols[d.pop("__pos")]] = d
+    return out
 
 
 def _decide(
-    string_cols: list[str],
     decisions: dict[str, str],
     full: dict[str, dict],
     num_candidates: list[str],
     date_candidates: list[str],
     thr: float,
 ) -> InferenceResult:
-    for c in string_cols:
-        f_ = full.get(c)
-        if f_ is None or f_["total"] == 0:
+    for c, f_ in full.items():
+        if f_["total"] == 0:
             continue
         # numeric first (order quirk W:275-279)
-        if (
-            c in num_candidates
-            and (f_["ne"] or 0) > 0
-            and f_["num_fail"] == 0
-        ):
+        if c in num_candidates and f_["ne"] > 0 and f_["num_fail"] == 0:
             decisions[c] = "double"
-            continue
-        if c in date_candidates and (f_["date_ok"] or 0) / f_["total"] >= thr:
+        elif c in date_candidates and f_["date_ok"] / f_["total"] >= thr:
             decisions[c] = "timestamp"
     return InferenceResult(decisions)
 
@@ -393,6 +442,8 @@ def apply_types(df: DataFrame, result: InferenceResult) -> DataFrame:
     return df.select(*cols)
 
 
-def infer_and_cast(df: DataFrame, cfg: ScanConfig | None = None) -> tuple[DataFrame, InferenceResult]:
-    res = infer_types(df, cfg)
+def infer_and_cast(
+    df: DataFrame, cfg: ScanConfig | None = None, row_hint: int | None = None
+) -> tuple[DataFrame, InferenceResult]:
+    res = infer_types(df, cfg, row_hint=row_hint)
     return apply_types(df, res), res

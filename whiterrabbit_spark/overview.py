@@ -16,6 +16,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from whiterrabbit_spark.session import local_frame
+
 OVERVIEW_SCHEMA = T.StructType(
     [
         T.StructField("table", T.StringType(), False),
@@ -61,4 +63,4 @@ def build_overview(spark: SparkSession, results: list[FileScanResult]) -> DataFr
         )
         for i, r in enumerate(results)
     ]
-    return spark.createDataFrame(rows, OVERVIEW_SCHEMA)
+    return local_frame(spark, rows, OVERVIEW_SCHEMA)

@@ -65,6 +65,7 @@ from whiterrabbit_spark.cache import ThreadPool, cache_scope, memo, pin
 from whiterrabbit_spark.config import ScanConfig
 from whiterrabbit_spark.frequency import value_histogram
 from whiterrabbit_spark.infer import nonempty
+from whiterrabbit_spark.session import local_frame
 
 SUMMARY_SCHEMA = T.StructType(
     [
@@ -304,8 +305,7 @@ def profile_table(
                 med_date,
             )
         )
-    summary = spark.createDataFrame(rows, SUMMARY_SCHEMA)
-    return summary, raw
+    return local_frame(spark, rows, SUMMARY_SCHEMA), raw
 
 
 def profile_table_grouped(

@@ -2,7 +2,12 @@
 
 Result frames are KB-scale (per-column rows), so sinks collect to the
 driver and write with pandas/openpyxl — the distributed work already
-happened in the scan jobs.
+happened in the scan jobs. The overview and every file's summary are
+local relations (``session.local_frame``): collecting them runs no Spark
+job, and the TSV sink's ``toPandas`` runs only a JVM-side Arrow job.
+The frequency frames are lazy plans over each file's pinned histogram,
+so their finish (HAVING, top-K, percentage) still runs its jobs here, at
+sink time.
 
 Sheet/file naming parity:
 * xlsx: ``Overview`` sheet, one ``File{i}`` sheet per input, plus

@@ -3,7 +3,9 @@
 Per file (reference scan_file, whiteRRabbit.R:218-446):
   1. parse-free line count (io.count_lines ≈ ``wc -l``, W:221-223)
   2. all-string read (+ seeded exact-N sample when over max_rows, W:225-272)
-  3. type inference numeric→date (W:274-280)
+  3. type inference numeric→date (W:274-280): one aggregate job when the
+     sample (or a small file) is within the inference gate's head slice,
+     else the sampled gate plus one full-column job (infer.infer_types)
   4. optional ±5 day date shift (W:282-291)
   5. one value histogram per column (frequency.value_histogram): the
      non-empty values' counts, grouped once per table
@@ -121,9 +123,14 @@ def scan_file(
         # re-sampling per job would both re-read and re-randomize.
         df = pin(df)
         n_rows_checked = df.count()
+        row_bound = n_rows_checked
         partial_parse_keeps_bad_rows = False
     else:
         n_rows_checked = data_rows
+        # the line count bounds the rows of any parse of the file, a
+        # quarantined read's pruned parse (which keeps malformed rows)
+        # included
+        row_bound = total_lines
 
     # A delimited file under one split size arrives as ONE partition;
     # every downstream aggregation then runs single-threaded (the wide
@@ -142,7 +149,7 @@ def scan_file(
             decisions={f.name: f.dataType.simpleString() for f in df.schema.fields}
         )
     else:
-        typed, inference = infer_and_cast(df, cfg)
+        typed, inference = infer_and_cast(df, cfg, row_hint=row_bound)
     if cfg.shift_dates:
         typed = shift_dates(typed, cfg)
     if (

@@ -4,13 +4,19 @@ Local-mode knobs follow the public Spark docs: shuffle partitions sized to
 cores (not the 200 default), AQE on for runtime coalescing/skew handling,
 UTC session timezone (the reference parses dates tz="UTC",
 whiteRRabbit.R:181), Arrow enabled for the few pandas hops.
+
+``local_frame`` turns rows already on the driver (a scan's summary and
+overview) into a frame whose plan is a ``LocalRelation``: collecting it
+runs no job, where a ``createDataFrame(list)`` frame is a Python RDD that
+runs a job on Python workers at every read.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 
 def get_spark(
@@ -72,3 +78,24 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(
+    spark: SparkSession, rows: list[tuple], schema: T.StructType
+) -> DataFrame:
+    """``rows`` as a ``LocalRelation`` frame with exactly ``schema``.
+
+    Built through a ``pyarrow.Table`` typed from the Spark schema, so
+    non-nullable fields stay non-nullable and a float NaN stays NaN, apart
+    from None (NULL). ``collect()`` on the frame runs no Spark job.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) if rows else [()] * len(schema.fields)
+    table = pa.Table.from_arrays(
+        [pa.array(list(c), type=f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
