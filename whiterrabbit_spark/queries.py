@@ -8716,11 +8716,13 @@ def _pagerank_sql() -> str:
     r0 = 1/N; r_k = (1-d)/N + d * Σ_in r_{k-1}/deg; boundary deltas
     d_b = Σ|r_b - r_{b-2}| at b ∈ {2,4,6,8} (never at the final
     iteration, matching the `i+1 < n_iter` guard); the result is the
-    first boundary with d_b < tol, else r10."""
+    first boundary with d_b < tol, else r10. Every r_k and d_b is
+    MATERIALIZED: inlined, each reference re-derives the whole chain
+    below it (186 s at sf0.001 against 0.05 s materialized, same rows)."""
     d, n_iter, ck, tol = 0.85, 10, 2, 1e-3
     its = []
     for k in range(1, n_iter + 1):
-        its.append(f"""r{k} AS (
+        its.append(f"""r{k} AS MATERIALIZED (
   SELECT n.node, n.deg,
          (1.0 - {d}) / (SELECT n FROM nn) + {d} * coalesce(c.inc, 0.0) AS pr
   FROM nodes n LEFT JOIN (
@@ -8729,7 +8731,7 @@ def _pagerank_sql() -> str:
   ) c ON n.node = c.node
 )""")
     deltas = [
-        f"d{b} AS (SELECT sum(abs(a.pr - p.pr)) AS d "
+        f"d{b} AS MATERIALIZED (SELECT sum(abs(a.pr - p.pr)) AS d "
         f"FROM r{b} a JOIN r{b - ck} p ON a.node = p.node)"
         for b in range(ck, n_iter, ck)
     ]
@@ -8750,7 +8752,7 @@ sym AS (
   SELECT src AS node, count(*) AS deg FROM sym GROUP BY src
 ), nn AS (
   SELECT count(*) AS n FROM nodes
-), r0 AS (
+), r0 AS MATERIALIZED (
   SELECT node, deg, 1.0 / (SELECT n FROM nn) AS pr FROM nodes
 ),
 {", ".join(its)},
