@@ -8,7 +8,9 @@ quirk branch from SURVEY.md §1.3 / FIXTURES.md B1.
 from __future__ import annotations
 
 from pyspark.sql import Row
+from pyspark.sql import functions as F
 
+from tests.test_scan_e2e import _jobs_run_by
 from whiterrabbit_spark.config import ScanConfig
 from whiterrabbit_spark.infer import infer_and_cast, infer_types
 
@@ -152,47 +154,6 @@ def test_hex_numeric_remaining_divergences(spark):
     assert [r.v for r in typed.collect()] == [12.0, 2.0, 8.0]
 
 
-def test_wide_melt_path_matches_chunked(spark):
-    # The >wide_infer_cols melt path (O(1)-in-width plans) must type every
-    # column exactly as the per-column chunked path, including the edge
-    # branches: all-empty, >20%-missing date quirk, hex numerics, and
-    # numeric-over-date precedence.
-    rows = []
-    for i in range(40):
-        rows.append(
-            Row(
-                num=str(i * 1.5),
-                hexv=f"0x{i:x}",
-                date="2021-0%d-1%d" % (i % 9 + 1, i % 9),
-                gappy_date="2021-01-02" if i < 30 else None,  # 25% missing
-                mixed="7" if i % 2 else "x",
-                empty=None,
-                ymd_num="20210102",  # numeric wins over compact date
-                txt="alpha",
-            )
-        )
-    schema = ("num string, hexv string, date string, gappy_date string, "
-              "mixed string, empty string, ymd_num string, txt string")
-    df = spark.createDataFrame(rows, schema)
-    chunked = infer_types(df, ScanConfig())
-    melted = infer_types(df, ScanConfig(wide_infer_cols=2))
-    assert melted.decisions == chunked.decisions
-    assert melted.decisions["num"] == "double"
-    assert melted.decisions["hexv"] == "double"
-    assert melted.decisions["date"] == "timestamp"
-    assert melted.decisions["gappy_date"] == "string"  # >20% missing quirk
-    assert melted.decisions["mixed"] == "string"
-    assert melted.decisions["empty"] == "string"
-    assert melted.decisions["ymd_num"] == "double"
-    assert melted.decisions["txt"] == "string"
-
-
-def test_wide_melt_path_empty_table(spark):
-    df = spark.createDataFrame([], "a string, b string, c string")
-    res = infer_types(df, ScanConfig(wide_infer_cols=1))
-    assert res.decisions == {"a": "string", "b": "string", "c": "string"}
-
-
 def test_hex_numeric_leading_zeros(spark):
     # review fix: the 15-significant-digit bound must not count leading
     # zeros — fixed-width zero-padded hex ids are in conv's range
@@ -257,3 +218,28 @@ def test_one_pass_header_only_table(spark):
     for hint in (0, None):
         res = infer_types(df, CFG, row_hint=hint)
         assert res.decisions == {"a": "string", "b": "string"}
+
+
+def test_wide_frame_decides_as_narrow(spark):
+    # Unhinted (two-phase) inference over the one-pass frame's column kinds
+    # repeated to 256 columns decides each copy as the 8-column frame
+    # does, with the same Spark jobs: both aggregates are one melt whose
+    # plan does not grow with the width.
+    cfg = ScanConfig(inference_sample_size=50)  # head slice: 200 of 400 rows
+    narrow = _one_pass_frame(spark, 400)
+    wide = narrow.select(
+        [F.col(c).alias(f"{c}_{k}") for k in range(32) for c in narrow.columns]
+    )
+    got, jobs = {}, {}
+    for name, df in (("narrow", narrow), ("wide", wide)):
+        def run(name=name, df=df):
+            got[name] = infer_types(df, cfg).decisions
+
+        jobs[name] = _jobs_run_by(spark, run, f"infer-width-{name}")
+    assert len(got["wide"]) == 256
+    assert got["wide"] == {
+        f"{c}_{k}": got["narrow"][c] for k in range(32) for c in narrow.columns
+    }
+    assert got["narrow"]["hexv"] == "double"
+    assert got["narrow"]["gappy"] == "string"  # >20% missing quirk
+    assert jobs["wide"] == jobs["narrow"]

@@ -135,6 +135,28 @@ def test_summary_and_overview_are_local_relations(spark, workdir):
     assert overview.collect()[0]["file_name"] == "tiny.tsv"
 
 
+def test_tsv_sink_collects_local_frames(spark, workdir, tmp_path):
+    # The overview and summaries are local relations: the TSV sink
+    # collects them, so writing them submits no Spark job.
+    from whiterrabbit_spark.overview import build_overview
+
+    cfg = ScanConfig(max_rows=-1, scan_field_values=False)
+    results = [
+        scan_file(spark, f"{workdir}/{n}", cfg)
+        for n in ("tiny.tsv", "profile_mixed.tsv")
+    ]
+    overview = build_overview(spark, results)
+    written = []
+
+    def write():
+        written.extend(write_tsv_report(overview, results, str(tmp_path), "S"))
+
+    assert _jobs_run_by(spark, write, "tsv-sink") == 0
+    assert [w.split("/")[-1] for w in written] == [
+        "S_Overview.tsv", "S_File1_Summary.tsv", "S_File2_Summary.tsv"
+    ]
+
+
 def test_shift_dates_bounded(spark, workdir):
     cfg = ScanConfig(max_rows=-1, shift_dates=True)
     plain = scan_file(spark, f"{workdir}/profile_mixed.tsv", ScanConfig(max_rows=-1))

@@ -77,15 +77,6 @@ class ScanConfig:
     # array falls out of cache); 5% is ample for profiling overviews.
     approx_distinct_rsd: float = 0.05
     max_agg_exprs_per_job: int = 1_500  # chunk very wide tables (SURVEY §4)
-    # above this many string columns, type inference switches from
-    # per-column chunked aggregations (one Catalyst plan per ~16-col chunk
-    # — analysis/codegen cost linear in width) to a single melt
-    # (explode-struct) job whose plan size is O(1) in width; the melt
-    # shuffles only per-column counters (partial agg), so it is also safe
-    # at scale, it just pays a row-explosion CPU cost that only wins when
-    # plan count dominates — i.e. very wide tables
-    wide_infer_cols: int = 200
-    round_digits: int = 6               # stat rounding for stable comparisons
 
     @property
     def sep(self) -> str:

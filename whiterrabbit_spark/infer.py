@@ -24,22 +24,22 @@ Re-expresses the reference's two parser gates (whiteRRabbit.R):
 * Order quirk (W:275-279): numeric is attempted first — a ``"20230101"``
   column types as double and never reaches the date parser.
 
-Execution shape: the gate reads one head slice of
-``_SLICE_FACTOR × inference_sample_size`` rows (a numeric round, then a
-date round on the columns the numeric round did not pass), and one melted
-full-column aggregate (``_column_counts``) counts the exact rules for the
-surviving candidates. When the caller bounds the frame's rows
-(``row_hint``) at or below the slice, the slice would be the whole frame,
-so the gate's counts ARE the full counts (its numeric successes are the
-non-empty values minus the cast failures). One ``_column_counts`` pass
-over every string column then yields both the shortlist and the rules'
-inputs, and decides exactly as the two phases: one aggregate instead of
-a pinned slice, two gate rounds and a second full pass (one job over a
-one-partition frame, as a scan's sample or small file arrives). Its date count
-parses only values that fail the double cast or are 8 or 14 digits: a
-value both parses accept can only match a separator-free pattern
-(yyyyMMdd, yyyyMMddHHmmss) at its exact width, so numeric columns skip
-the 24-pattern parse and the count stays exact.
+Execution shape: two passes of one counting aggregate
+(``_column_counts``, a melt of the string columns grouped by position).
+The first runs over the gate's head slice of
+``_SLICE_FACTOR × inference_sample_size`` rows and gives every string
+column its gate rates (numeric successes are the non-empty values minus
+the cast failures); the second runs over the whole frame, for the
+surviving candidates only, and counts the exact rules. When the caller
+bounds the frame's rows (``row_hint``) at or below the slice, the slice
+would be the whole frame, so the first pass already holds the full
+counts and the second is skipped (one job over a one-partition frame,
+as a scan's sample or small file arrives). The date count parses only
+values that fail the double cast or are 8 or 14 digits: a value both
+parses accept can only match a separator-free pattern (yyyyMMdd,
+yyyyMMddHHmmss) at its exact width, so numeric columns skip the
+24-pattern parse and the count stays exact; a numeric-gated column's
+date count is never read (numeric-first precedence, W:275-279).
 
 Divergences (documented, SURVEY §1.3): the reference samples unseeded →
 borderline columns type nondeterministically; we seed. R ``as.numeric``
@@ -54,13 +54,7 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from whiterrabbit_spark.cache import ThreadPool, cache_scope, pin
 from whiterrabbit_spark.config import ScanConfig
-
-# columns per inference-gate job: each column carries a
-# len(DATE_PATTERNS)-branch coalesce, so ~16 columns keeps the generated
-# aggregate inside codegen method limits (empirical knee on wide tables)
-_GATE_COLS_PER_JOB = 16
 
 # the gate's head slice is this many times ``inference_sample_size`` rows:
 # oversampled so mostly-empty columns still see enough non-empty values
@@ -157,10 +151,6 @@ class InferenceResult:
         return [c for c, k in self.decisions.items() if k == kind]
 
 
-def _chunk(seq: list, size: int) -> list[list]:
-    return [seq[i : i + size] for i in range(0, len(seq), size)]
-
-
 def _posmelt(df: DataFrame, cols: list[str]) -> DataFrame:
     """Long-form ``(__pos, __val)`` view: ``posexplode(array(cols))``.
 
@@ -174,122 +164,6 @@ def _posmelt(df: DataFrame, cols: list[str]) -> DataFrame:
     return df.select(
         F.posexplode(F.array(*[F.col(c) for c in cols])).alias("__pos", "__val")
     )
-
-
-def _sample_gate(df: DataFrame, cols: list[str], cfg: ScanConfig) -> dict[str, dict]:
-    """Phase A: sampled success rates to shortlist candidate columns.
-
-    Reference W:146-151 / W:170-189 samples ≤1000 non-empty values per
-    column. We take one bounded head slice shared by all columns (one cheap
-    job instead of k, no full scan just to size a random fraction) and
-    compute per-column rates among its non-empty values. The gate is only a
-    shortlist: Phase B re-evaluates the exact rule on the full column, so
-    the head bias can only skip a column whose head is unrepresentative —
-    analogous to the reference's own nondeterministic borderline gate
-    (unseeded sample, W:148/W:173), but deterministic here.
-    """
-    # limit() collapses to ONE partition — repartition so the (expensive,
-    # 24-pattern date) gate expressions evaluate with full parallelism
-    # instead of on a single core.
-    par = df.sparkSession.sparkContext.defaultParallelism
-    sample_df = (
-        df.select(cols)
-        .limit(cfg.inference_sample_size * _SLICE_FACTOR)
-        .repartition(par)
-    )
-
-    # Round 1 (cheap): non-empty + numeric-cast rates for every column.
-    # Round 2 (expensive, len(DATE_PATTERNS)-branch coalesce per column):
-    # ONLY for columns the numeric gate did not capture — numeric-first
-    # precedence (W:275-279) means a numeric winner never consults the
-    # date parser, so skipping it is semantics-free and removes the date
-    # expressions for numeric-heavy tables entirely. Both rounds chunk
-    # small (a single agg over hundreds of coalesce trees exceeds codegen
-    # method limits and evaluates interpreted) and run thread-parallel —
-    # measured 3.5× on a 300-column table.
-    def num_chunk(chunk: list[str]) -> dict[str, dict]:
-        exprs = []
-        for c in chunk:
-            col = F.col(c)
-            exprs.append(F.count(F.when(nonempty(col), 1)).alias(f"{c}__ne"))
-            exprs.append(
-                F.count(
-                    F.when(nonempty(col) & numeric_cast_expr(col).isNotNull(), 1)
-                ).alias(f"{c}__num_ok")
-            )
-        row = sample_df.select(chunk).agg(*exprs).collect()[0].asDict()
-        return {
-            c: {"ne": row[f"{c}__ne"], "num_ok": row[f"{c}__num_ok"], "date_ok": 0}
-            for c in chunk
-        }
-
-    def date_chunk(chunk: list[str]) -> dict[str, int]:
-        exprs = [
-            F.count(
-                F.when(nonempty(F.col(c)) & date_parse_expr(F.col(c)).isNotNull(), 1)
-            ).alias(f"{c}__date_ok")
-            for c in chunk
-        ]
-        row = sample_df.select(chunk).agg(*exprs).collect()[0].asDict()
-        return {c: row[f"{c}__date_ok"] for c in chunk}
-
-    out: dict[str, dict] = {}
-    with cache_scope():
-        sample_df = pin(sample_df)
-        if len(cols) > cfg.wide_infer_cols:
-            # Extreme-width path: two melt jobs with O(1)-in-width plans
-            # replace ~cols/16 chunked agg jobs whose Catalyst
-            # analysis+codegen dominates wall time (150 s → sub-minute at
-            # 1000 cols, BASELINE.md wide-table smoke).
-            v = F.col("__val")
-            for r in (
-                _posmelt(sample_df, cols)
-                .groupBy("__pos")
-                .agg(
-                    F.count(F.when(nonempty(v), 1)).alias("ne"),
-                    F.count(
-                        F.when(nonempty(v) & numeric_cast_expr(v).isNotNull(), 1)
-                    ).alias("num_ok"),
-                )
-                .collect()
-            ):
-                out[cols[r["__pos"]]] = {
-                    "ne": r["ne"], "num_ok": r["num_ok"], "date_ok": 0
-                }
-            for c in cols:  # empty table melts to zero groups
-                out.setdefault(c, {"ne": 0, "num_ok": 0, "date_ok": 0})
-            thr = cfg.success_threshold
-            date_cols = [
-                c for c in cols
-                if not (out[c]["ne"] > 0 and out[c]["num_ok"] / out[c]["ne"] >= thr)
-            ]
-            if date_cols:
-                for r in (
-                    _posmelt(sample_df, date_cols)
-                    .groupBy("__pos")
-                    .agg(
-                        F.count(
-                            F.when(
-                                nonempty(v) & date_parse_expr(v).isNotNull(), 1
-                            )
-                        ).alias("date_ok")
-                    )
-                    .collect()
-                ):
-                    out[date_cols[r["__pos"]]]["date_ok"] = r["date_ok"]
-            return out
-        with ThreadPool(max_workers=8) as pool:
-            for d in pool.map(num_chunk, _chunk(cols, _GATE_COLS_PER_JOB * 8)):
-                out.update(d)
-            thr = cfg.success_threshold
-            date_cols = [
-                c for c in cols
-                if not (out[c]["ne"] > 0 and out[c]["num_ok"] / out[c]["ne"] >= thr)
-            ]
-            for d in pool.map(date_chunk, _chunk(date_cols, _GATE_COLS_PER_JOB)):
-                for c, v in d.items():
-                    out[c]["date_ok"] = v
-    return out
 
 
 def infer_types(
@@ -306,14 +180,17 @@ def infer_types(
 
     Each is tried only on a column whose gate rate (its share of
     non-empty values that parse, W:146-151/W:170-189) reaches the
-    threshold, and the date gate only on a column the numeric gate did
-    not pass (W:275-279). ``row_hint`` is an upper bound on ``df``'s
-    rows, when the caller has one. At or below the gate's head slice
-    (``_SLICE_FACTOR × inference_sample_size`` rows) the slice would be
-    the whole frame, so one aggregate over every string column yields the
-    gate's rates and the rules' counts at once. Otherwise two phases: the
-    sampled gate shortlists candidates, then ONE full-column aggregation
-    evaluates the rules on them.
+    threshold, and the date rule only on a column the numeric gate did
+    not pass (W:275-279). The gate reads one head slice of
+    ``_SLICE_FACTOR × inference_sample_size`` rows shared by all columns,
+    where the reference samples ≤1000 non-empty values per column
+    (unseeded, W:148/W:173): deterministic here, and only a shortlist,
+    since the full pass re-checks the exact rule. Both are one
+    ``_column_counts`` aggregate: over the slice for every string column,
+    then over ``df`` for the candidates. ``row_hint`` is an upper bound on
+    ``df``'s rows, when the caller has one; at or below the slice the
+    slice is ``df`` itself, so the first aggregate's counts are the full
+    counts and the second is skipped.
     """
     cfg = cfg or ScanConfig()
     string_cols = [f.name for f in df.schema.fields if f.dataType.simpleString() == "string"]
@@ -321,34 +198,29 @@ def infer_types(
     if not string_cols:
         return InferenceResult(decisions)
 
-    one_pass = (
-        row_hint is not None
-        and row_hint <= _SLICE_FACTOR * cfg.inference_sample_size
-    )
-    if one_pass:
-        full = _column_counts(df, string_cols, n_date=len(string_cols))
-        gate = {
-            c: {"ne": f["ne"], "num_ok": f["ne"] - f["num_fail"],
-                "date_ok": f["date_ok"]}
-            for c, f in full.items()
-        }
+    slice_rows = _SLICE_FACTOR * cfg.inference_sample_size
+    if row_hint is not None and row_hint <= slice_rows:
+        head = df
     else:
-        gate = _sample_gate(df, string_cols, cfg)
+        # limit() collapses to ONE partition: repartition so the 24-pattern
+        # date parse runs on every core instead of one
+        par = df.sparkSession.sparkContext.defaultParallelism
+        head = df.select(string_cols).limit(slice_rows).repartition(par)
+    gate = _column_counts(head, string_cols, n_date=len(string_cols))
     thr = cfg.success_threshold
 
-    def passes(c: str, ok: str) -> bool:
-        return gate[c]["ne"] > 0 and gate[c][ok] / gate[c]["ne"] >= thr
-
-    num_candidates = [c for c in string_cols if passes(c, "num_ok")]
-    # numeric-first precedence: a numeric-gated column is never date-probed
-    date_candidates = [
-        c for c in string_cols
-        if not passes(c, "num_ok") and passes(c, "date_ok")
-    ]
-    if not one_pass:
+    num_candidates: list[str] = []
+    date_candidates: list[str] = []
+    for c, g in gate.items():
+        if g["ne"] > 0 and (g["ne"] - g["num_fail"]) / g["ne"] >= thr:
+            num_candidates.append(c)
+        # numeric-first precedence: a numeric-gated column's date count is unread
+        elif g["ne"] > 0 and g["date_ok"] / g["ne"] >= thr:
+            date_candidates.append(c)
+    full = gate
+    if head is not df:
         if not num_candidates and not date_candidates:
             return InferenceResult(decisions)
-        # Phase B: the rules' counts for the surviving candidates only
         date_probe = sorted(date_candidates)
         full = _column_counts(
             df, date_probe + sorted(num_candidates), n_date=len(date_probe)

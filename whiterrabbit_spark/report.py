@@ -4,7 +4,7 @@ Result frames are KB-scale (per-column rows), so sinks collect to the
 driver and write with pandas/openpyxl — the distributed work already
 happened in the scan jobs. The overview and every file's summary are
 local relations (``session.local_frame``): collecting them runs no Spark
-job, and the TSV sink's ``toPandas`` runs only a JVM-side Arrow job.
+job, so both sinks collect (the TSV sink then hands the rows to pandas).
 The frequency frames are lazy plans over each file's pinned histogram,
 so their finish (HAVING, top-K, percentage) still runs its jobs here, at
 sink time.
@@ -25,10 +25,6 @@ import os
 from pyspark.sql import DataFrame
 
 from whiterrabbit_spark.overview import FileScanResult
-
-
-def _to_pandas(df: DataFrame):
-    return df.toPandas()
 
 
 def sortable_columns(df: DataFrame) -> list[str]:
@@ -57,18 +53,24 @@ def write_tsv_report(
     output_dir: str,
     prefix: str = "ScanReport",
 ) -> list[str]:
+    import pandas as pd
+
+    def to_pandas(df: DataFrame) -> pd.DataFrame:
+        header, rows = _sheet_data(df)
+        return pd.DataFrame(rows, columns=header)
+
     os.makedirs(output_dir, exist_ok=True)
     written = []
     p = os.path.join(output_dir, f"{prefix}_Overview.tsv")
-    _to_pandas(overview).to_csv(p, sep="\t", index=False)
+    to_pandas(overview).to_csv(p, sep="\t", index=False)
     written.append(p)
     for i, r in enumerate(results):
         tab = f"File{i + 1}"
         p = os.path.join(output_dir, f"{prefix}_{tab}_Summary.tsv")
-        _to_pandas(r.summary).to_csv(p, sep="\t", index=False)
+        to_pandas(r.summary).to_csv(p, sep="\t", index=False)
         written.append(p)
         if r.frequencies is not None:
-            freq_pd = _to_pandas(r.frequencies)
+            freq_pd = to_pandas(r.frequencies)
             if len(freq_pd) > 0:
                 p = os.path.join(output_dir, f"{prefix}_{tab}_Freq.tsv")
                 freq_pd.to_csv(p, sep="\t", index=False)

@@ -3,9 +3,10 @@
 Per file (reference scan_file, whiteRRabbit.R:218-446):
   1. parse-free line count (io.count_lines ≈ ``wc -l``, W:221-223)
   2. all-string read (+ seeded exact-N sample when over max_rows, W:225-272)
-  3. type inference numeric→date (W:274-280): one aggregate job when the
-     sample (or a small file) is within the inference gate's head slice,
-     else the sampled gate plus one full-column job (infer.infer_types)
+  3. type inference numeric→date (W:274-280): one counting aggregate over
+     the inference gate's head slice, then one over the candidates' full
+     columns; the second is skipped when the sample (or a small file) fits
+     in the slice (infer.infer_types)
   4. optional ±5 day date shift (W:282-291)
   5. one value histogram per column (frequency.value_histogram): the
      non-empty values' counts, grouped once per table
