@@ -1811,6 +1811,8 @@ def test_kruskal_wallis_hand_case(spark):
         "v double, g string",
     )
     r = kruskal_wallis(df, "v", "g").collect()[0]
+    # max_single_reducer=0 forces the bucketed distributed prefix sum
+    assert kruskal_wallis(df, "v", "g", max_single_reducer=0).collect() == [r]
     assert r["n"] == 6 and r["k"] == 2
     assert abs(r["h"] - 27.0 / 7.0) < 1e-6  # output rounds at 6dp
     assert abs(r["h_adj"] - r["h"]) < 1e-6
@@ -1972,6 +1974,11 @@ def test_conformal_coverage_on_planted_noise(spark):
         rows.append((i, float(g), 100.0 * g + noise * 10.0))
     df = spark.createDataFrame(rows, "id long, x double, y double")
     out = conformal_intervals(df, "x", "y", "id", alpha=0.1).collect()[0]
+    # max_single_reducer=0 forces the bucketed distributed prefix sum
+    forced = conformal_intervals(
+        df, "x", "y", "id", alpha=0.1, max_single_reducer=0
+    ).collect()
+    assert forced == [out]
     assert out.n_train > 1500 and out.n_cal > 700 and out.n_eval > 700
     assert out.n_unpredicted == 0
     assert out.coverage_pct >= 85.0  # guarantee is >=90 in expectation

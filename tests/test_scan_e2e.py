@@ -943,3 +943,23 @@ def test_incremental_scan_config_invalidation(spark, tmp_path):
     assert rep3.scanned == ["a.tsv"]  # config change -> full rescan
     s = {r.column_name: r for r in res3[0].summary.collect()}
     assert s["id"].total_count == 20  # profiled under the NEW config
+
+
+def test_incremental_cache_survives_report_format_switch(
+    spark, tmp_path, capsys
+):
+    """The report format is a sink choice, not a scan setting: switching
+    ``-f`` between runs on one state dir must load from the cache."""
+    from whiterrabbit_spark.cli import main
+
+    wd, od, state = tmp_path / "in", tmp_path / "out", tmp_path / "state"
+    wd.mkdir(), od.mkdir()
+    (wd / "a.tsv").write_text(
+        "id\n" + "\n".join(str(i) for i in range(20)) + "\n"
+    )
+    base = ["-w", str(wd), "-o", str(od), "--state-dir", str(state)]
+    assert main(base + ["-f", "xlsx"]) == 0
+    assert "1 scanned, 0 cached" in capsys.readouterr().out
+    assert main(base + ["-f", "tsv"]) == 0
+    assert "0 scanned, 1 cached" in capsys.readouterr().out
+    assert (od / "ScanReport_File1_Summary.tsv").exists()

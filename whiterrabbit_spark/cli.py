@@ -77,7 +77,6 @@ def main(argv: list[str] | None = None) -> int:
         scan_field_values=args.scan_field_values,
         random_sample=args.random_sample,
         prefix=args.prefix,
-        output_format=args.output_format,
         seed=args.seed,
         approx=args.approx,
         quarantine_dir=args.output_dir if args.quarantine else "",

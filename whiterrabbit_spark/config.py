@@ -40,7 +40,6 @@ class ScanConfig:
     scan_field_values: bool = True      #                   (W:71-74)
     random_sample: bool = True          #                   (W:79-82)
     prefix: str = "ScanReport"          #                   (W:55-58)
-    output_format: str = "xlsx"         # 'xlsx' | 'tsv'    (W:42-46)
 
     # Inference gates (hard-coded in the reference)
     success_threshold: float = 0.8      # W:139, W:164

@@ -512,9 +512,7 @@ def negative_sampling(
     )
     # pos feeds the anchor fan-out AND the partner lookup (and total);
     # persist so the distinct+prefix pass runs once, not four times.
-    pos = pin(_hist_exclusive_prefix(
-        ids, "h", "cnt", n_parts, out_col="pos"
-    ))
+    pos = pin(_hist_exclusive_prefix(ids, "h", {"pos": "cnt"}, n_parts))
     total = pos.agg(F.count(F.lit(1)).alias("n"))
     anchors = pos.crossJoin(F.broadcast(total)).select(
         F.col("id").alias("anchor_id"),

@@ -962,14 +962,11 @@ def zipf_fit(
     ).where(F.col("term") != "")
     freq = toks.groupBy("term").agg(F.count(F.lit(1)).alias("f"))
     order = [F.col("f").desc(), F.col("term").asc()]
-    if max_single_reducer > 0 and (
-        _approx_distinct(toks, "term") <= max_single_reducer
-    ):
-        ranked = freq.withColumn(
-            "r", F.row_number().over(Window.orderBy(*order))
-        )
-    else:
-        ranked = distributed_row_number(freq, order, "r")
+    ranked = distributed_row_number(
+        freq, order, "r",
+        distributed=max_single_reducer <= 0
+        or _approx_distinct(toks, "term") > max_single_reducer,
+    )
     lf, lr = F.log(F.col("f").cast("double")), F.log(
         F.col("r").cast("double")
     )

@@ -23,7 +23,7 @@ from __future__ import annotations
 import glob
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -128,13 +128,36 @@ def read_all_string(
     overview N_rows over-counts multiline records on both engines.
     """
     cols = read_header(path, sep)
-    schema = T.StructType([T.StructField(c, T.StringType(), True) for c in cols])
-    # Spark's univocity parser yields NULL for an unquoted empty field no
-    # matter how nullValue/emptyValue are set; fread yields "" (the
-    # EmptyCount-vs-MissingCount distinction, W:313-319). Read with a
-    # sentinel nullValue so nothing else maps to NULL in the parser, then
-    # remap per column: parser-NULL (truly empty field) -> "", literal na
-    # string -> NULL. Pure scan-stage projection, no extra pass.
+    raw, fixed = _csv_strings(
+        spark, path, sep, cols, null_value, multiLine=multiline
+    )
+    return raw.select(*fixed)
+
+
+def _csv_strings(
+    spark: SparkSession,
+    path: str,
+    sep: str,
+    cols: list[str],
+    null_value: str,
+    extra_cols: tuple[str, ...] = (),
+    **options,
+) -> tuple[DataFrame, list[Column]]:
+    """The all-string CSV parse behind both delimited readers: returns
+    the raw frame (``cols`` + ``extra_cols``, all StringType, reader
+    ``options`` appended) and the per-column projection that restores
+    fread's empty/missing semantics.
+
+    Spark's univocity parser yields NULL for an unquoted empty field no
+    matter how nullValue/emptyValue are set; fread yields "" (the
+    EmptyCount-vs-MissingCount distinction, W:313-319). Read with a
+    sentinel nullValue so nothing else maps to NULL in the parser, then
+    remap per column: parser-NULL (truly empty field) -> "", literal na
+    string -> NULL. Pure scan-stage projection, no extra pass.
+    """
+    schema = T.StructType(
+        [T.StructField(c, T.StringType(), True) for c in [*cols, *extra_cols]]
+    )
     raw = (
         spark.read.schema(schema)
         .option("header", True)
@@ -143,7 +166,7 @@ def read_all_string(
         .option("escape", '"')
         .option("nullValue", " __WRS_NO_NULL__ ")
         .option("mode", "PERMISSIVE")
-        .option("multiLine", multiline)
+        .options(**options)
         .csv(path)
     )
     fixed = [
@@ -153,7 +176,7 @@ def read_all_string(
         .alias(c)
         for c in cols
     ]
-    return raw.select(*fixed)
+    return raw, fixed
 
 
 # Event-time columns with two valid on-disk generations in the driver's
@@ -262,28 +285,10 @@ def read_all_string_quarantine(
             "captured line-wise; use read_all_string(multiline=True)"
         )
     cols = read_header(path, sep)
-    schema = T.StructType(
-        [T.StructField(c, T.StringType(), True) for c in cols]
-        + [T.StructField(CORRUPT_COL, T.StringType(), True)]
+    raw, fixed = _csv_strings(
+        spark, path, sep, cols, null_value, extra_cols=(CORRUPT_COL,),
+        columnNameOfCorruptRecord=CORRUPT_COL,
     )
-    raw = (
-        spark.read.schema(schema)
-        .option("header", True)
-        .option("sep", sep)
-        .option("quote", '"')
-        .option("escape", '"')
-        .option("nullValue", " __WRS_NO_NULL__ ")
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", CORRUPT_COL)
-        .csv(path)
-    )
-    fixed = [
-        F.when(F.col(c).isNull(), F.lit(""))
-        .when(F.col(c) == null_value, F.lit(None))
-        .otherwise(F.col(c))
-        .alias(c)
-        for c in cols
-    ]
     clean = raw.where(F.col(CORRUPT_COL).isNull()).select(*fixed)
 
     header_line = sep.join(cols)

@@ -1092,14 +1092,6 @@ def all_empty_fields(raw: dict[str, dict]) -> list[str]:
     ]
 
 
-# Rows the approx-quantile paths sample down to before sketching: at 1M
-# values the sampling error on a 1st/99th-percentile rank is ~1e-4 —
-# far inside the sketch accuracy — and the sketch insert cost stops
-# scaling with the corpus.
-from whiterrabbit_spark.scale import (APPROX_SAMPLE_ROWS as
-                                      _APPROX_SAMPLE_ROWS)
-
-
 def _auto_approx_source(
     df: DataFrame, approx: bool | None, auto_approx_rows: int
 ) -> tuple[bool, DataFrame]:
@@ -1116,7 +1108,7 @@ def _auto_approx_source(
         approx = n > auto_approx_rows
     src = df
     if approx:
-        frac = min(1.0, _APPROX_SAMPLE_ROWS / max(n, 1))
+        frac = min(1.0, scale.APPROX_SAMPLE_ROWS / max(n, 1))
         if frac < 1.0:
             src = df.sample(frac, seed=42)
     return approx, src
@@ -1620,18 +1612,9 @@ def ecdf_lookup(
     The naive form — ``cume_dist().over(Window.orderBy(v))`` — funnels
     every ROW through one reducer. This one runs over the value
     HISTOGRAM (``groupBy(v).count``, one partial-aggregable shuffle that
-    collapses to |distinct| rows) and computes the cumulative sum with a
-    **bucketed distributed prefix sum**, never a global-order window:
-
-    1. equi-width value buckets from a broadcast (min, max) aggregate —
-       ordered like ``repartitionByRange`` partitions but WITHOUT its
-       extra sampling job (everything stays one lazy plan; the histogram
-       subtree appears three times and Catalyst's ReuseExchange computes
-       it once);
-    2. each bucket's local running sum (``Window.partitionBy(bucket)``
-       — parallel);
-    3. per-bucket offsets from an O(n_buckets) side aggregate whose
-       single-reducer window touches ~dozens of rows.
+    collapses to |distinct| rows) and computes the cumulative sum with
+    the **bucketed distributed prefix sum** of
+    :func:`_hist_exclusive_prefix`, never a global-order window.
 
     A continuous double column at 100 TB has |distinct| ≈ |rows|; the
     r2-judged global-order form would serialize the whole column through
@@ -1669,7 +1652,7 @@ def ecdf_lookup(
         return hist.select("v", (cume / total).alias("cume_dist"))
     # shared bucketed machinery (_hist_exclusive_prefix); inclusive
     # cume = exclusive-before + own count, total joined lazily
-    pre = _hist_exclusive_prefix(hist, "v", "cnt", n_parts)
+    pre = _hist_exclusive_prefix(hist, "v", {"before": "cnt"}, n_parts)
     total = hist.agg(F.sum("cnt").alias("__total"))
     return pre.join(F.broadcast(total)).select(
         "v",
@@ -1694,10 +1677,12 @@ def distributed_row_number(
     order_cols: list,
     out_col: str,
     n_partitions: int | None = None,
+    distributed: bool = True,
 ) -> DataFrame:
     """Exact global ``row_number`` over a composite ordering WITHOUT a
     single-reducer sort — the scale path behind every "rank the whole
-    frame" operator (VERDICT r6 #5).
+    frame" operator (VERDICT r6 #5). ``distributed=False`` runs the
+    plain global window instead (one task's worth of rows).
 
     Plan: ``repartitionByRange`` on the FULL ordering (the range
     sampler balances partitions even when the leading key is massively
@@ -1713,6 +1698,10 @@ def distributed_row_number(
     repo applies everywhere (offsets + output both read the pinned
     partitions; a lazy frame would re-shuffle per consumer at scale).
     """
+    if not distributed:
+        return df.withColumn(
+            out_col, F.row_number().over(Window.orderBy(*order_cols))
+        )
     spark = df.sparkSession
     n_parts = n_partitions or spark.sparkContext.defaultParallelism
     d = pin(
@@ -1938,23 +1927,23 @@ def spearman_matrix(
                         for a, b in pairs
                     ]
                 )
-            ).alias("__pid", "__p")
+            ).alias("__pair", "__p")
         )
-        .select("__pid", "__p.va", "__p.vb")
+        .select("__pair", "__p.va", "__p.vb")
         .where(F.col("va").isNotNull() & F.col("vb").isNotNull())
-        .groupBy("__pid", "va", "vb")
+        .groupBy("__pair", "va", "vb")
         .agg(F.count(F.lit(1)).alias("cnt")),
         checkpoint=True,
     )
-    totals = joint.groupBy("__pid").agg(F.sum("cnt").alias("__ntot"))
+    totals = joint.groupBy("__pair").agg(F.sum("cnt").alias("__ntot"))
 
     def _marg_ranks(side: str) -> DataFrame:
-        h = joint.groupBy("__pid", side).agg(F.sum("cnt").alias("cnt"))
-        cum = _hist_exclusive_prefix_grouped(
-            h, ["__pid"], side, "cnt", n_parts
+        h = joint.groupBy("__pair", side).agg(F.sum("cnt").alias("cnt"))
+        cum = _hist_exclusive_prefix(
+            h, side, {"before": "cnt"}, n_parts, grp_cols=["__pair"]
         )
-        return cum.join(F.broadcast(totals), "__pid").select(
-            "__pid",
+        return cum.join(F.broadcast(totals), "__pair").select(
+            "__pair",
             F.col(side),
             (
                 (F.col("before") + F.col("cnt"))
@@ -1962,12 +1951,12 @@ def spearman_matrix(
             ).alias(f"__r_{side}"),
         )
 
-    ranked = joint.join(_marg_ranks("va"), ["__pid", "va"]).join(
-        _marg_ranks("vb"), ["__pid", "vb"]
+    ranked = joint.join(_marg_ranks("va"), ["__pair", "va"]).join(
+        _marg_ranks("vb"), ["__pair", "vb"]
     )
     w = F.col("cnt").cast("double")
     x, y = F.col("__r_va"), F.col("__r_vb")
-    stats = ranked.groupBy("__pid").agg(
+    stats = ranked.groupBy("__pair").agg(
         F.sum("cnt").alias("n"),
         F.sum(x * w).alias("sx"),
         F.sum(y * w).alias("sy"),
@@ -1981,17 +1970,17 @@ def spearman_matrix(
     vy = F.col("syy") - F.col("sy") * F.col("sy") / n
     corr = F.when((vx > 0) & (vy > 0), cov / F.sqrt(vx * vy))
     spine = spark.range(len(pairs)).select(
-        F.col("id").cast("int").alias("__pid")
+        F.col("id").cast("int").alias("__pair")
     )
     return (
-        spine.join(stats, "__pid", "left")
-        .orderBy("__pid")
+        spine.join(stats, "__pair", "left")
+        .orderBy("__pair")
         .select(
             F.element_at(
-                F.array(*[F.lit(a) for a, _ in pairs]), F.col("__pid") + 1
+                F.array(*[F.lit(a) for a, _ in pairs]), F.col("__pair") + 1
             ).alias("col_a"),
             F.element_at(
-                F.array(*[F.lit(b) for _, b in pairs]), F.col("__pid") + 1
+                F.array(*[F.lit(b) for _, b in pairs]), F.col("__pair") + 1
             ).alias("col_b"),
             corr.alias("spearman"),
             F.coalesce(F.col("n"), F.lit(0)).cast("long").alias("n"),
@@ -2419,75 +2408,49 @@ def chi2_drift(
 def _hist_exclusive_prefix(
     hist: DataFrame,
     order_col: str,
-    cnt_col: str,
+    sums: dict[str, str],
     n_partitions: int,
-    out_col: str = "before",
+    grp_cols: list[str] | tuple[str, ...] = (),
+    distributed: bool = True,
 ) -> DataFrame:
-    """Exclusive running sum of ``cnt_col`` in ``order_col`` order over a
-    value histogram, via the bucketed distributed prefix sum (the
-    :func:`ecdf_lookup` scheme): equi-width buckets from a broadcast
-    (min, max) aggregate, per-bucket local windows in parallel, and an
-    O(n_buckets) offset aggregate — never a global-order window, so a
-    |distinct|≈|rows| histogram still scales with the cluster.
+    """Exclusive running sums over a value histogram: each ``sums``
+    entry ``out_col: cnt_col`` adds ``out_col`` = the sum of
+    ``cnt_col`` over the rows before this one in ``order_col`` order,
+    resetting per ``grp_cols`` group.
+
+    ``distributed=False`` runs them as one ordered window (the
+    single-reducer form — fine while the histogram is one task's worth
+    of rows). Otherwise the bucketed distributed prefix sum, never a
+    global-order window, so a |distinct|≈|rows| histogram still scales
+    with the cluster:
+
+    1. equi-width buckets ``__pid`` from a broadcast per-group
+       (min, max) aggregate — ordered like ``repartitionByRange``
+       partitions but WITHOUT its extra sampling job (everything stays
+       one lazy plan; Catalyst's ReuseExchange computes the repeated
+       histogram subtree once);
+    2. each bucket's local running sums (``Window.partitionBy(bucket)``
+       — parallel);
+    3. per-bucket offsets from an O(groups × n_buckets) side aggregate
+       whose window touches ~dozens of rows.
+
+    All sums share the one bucket assignment, local window pass and
+    offset broadcast, so k prefixes over m groups (one melted
+    histogram) cost one traversal.
     """
-    oc = F.col(order_col)
-    bounds = hist.agg(F.min(oc).alias("__lo"), F.max(oc).alias("__hi"))
-    bucket = F.when(
-        F.col("__hi") > F.col("__lo"),
-        F.least(
-            F.floor(
-                (oc - F.col("__lo"))
-                / ((F.col("__hi") - F.col("__lo")) / n_partitions)
-            ),
-            F.lit(n_partitions - 1),
-        ),
-    ).otherwise(F.lit(0))
-    hist = hist.join(F.broadcast(bounds)).withColumn(
-        "__pid", bucket.cast("int")
-    )
-    totals = hist.groupBy("__pid").agg(F.sum(cnt_col).alias("__ptot"))
-    w_off = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = totals.select(
-        "__pid",
-        F.coalesce(F.sum("__ptot").over(w_off), F.lit(0)).alias("__off"),
-    )
-    w_loc = Window.partitionBy("__pid").orderBy(order_col).rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    return (
-        hist.withColumn(
-            "__lcum", F.coalesce(F.sum(cnt_col).over(w_loc), F.lit(0))
+    grp = list(grp_cols)
+    if not distributed:
+        w = Window.partitionBy(*grp).orderBy(order_col).rowsBetween(
+            Window.unboundedPreceding, -1
         )
-        .join(F.broadcast(offsets), "__pid")
-        .withColumn(out_col, F.col("__off") + F.col("__lcum"))
-        .drop("__pid", "__lo", "__hi", "__lcum", "__off")
-    )
-
-
-def _hist_exclusive_prefix_cols(
-    hist: DataFrame,
-    order_col: str,
-    cnt_cols: list[str],
-    n_partitions: int,
-    out_cols: list[str],
-    grp_cols: list[str] | None = None,
-) -> DataFrame:
-    """:func:`_hist_exclusive_prefix` for SEVERAL count columns (and
-    optionally per-group, resetting on ``grp_cols``) in ONE bucketed
-    traversal: all running sums share the same bucket assignment, local
-    Window pass and offset broadcast, so k probe prefixes over m groups
-    cost one pass instead of k·m (r8 — layout_prune_report_multi
-    computes every (probe, layout) position prefix from one melted
-    histogram). Each ``out_cols[i]`` is the exclusive running sum of
-    ``cnt_cols[i]`` in ``order_col`` order."""
-    grp = list(grp_cols or [])
+        return hist.withColumns({
+            out: F.coalesce(F.sum(c).over(w), F.lit(0))
+            for out, c in sums.items()
+        })
     oc = F.col(order_col)
-    if grp:
-        bounds = hist.groupBy(*grp).agg(
-            F.min(oc).alias("__lo"), F.max(oc).alias("__hi")
-        )
-    else:
-        bounds = hist.agg(F.min(oc).alias("__lo"), F.max(oc).alias("__hi"))
+    bounds = hist.groupBy(*grp).agg(
+        F.min(oc).alias("__lo"), F.max(oc).alias("__hi")
+    )
     bucket = F.when(
         F.col("__hi") > F.col("__lo"),
         F.least(
@@ -2501,99 +2464,40 @@ def _hist_exclusive_prefix_cols(
     hist = hist.join(F.broadcast(bounds), grp or None).withColumn(
         "__pid", bucket.cast("int")
     )
+    # per-sum temporaries: __t_<out> bucket total, __o_<out> bucket
+    # offset, __l_<out> in-bucket running sum
     totals = hist.groupBy(*grp, "__pid").agg(
-        *[F.sum(c).alias(f"__ptot_{i}") for i, c in enumerate(cnt_cols)]
+        *[F.sum(c).alias(f"__t_{o}") for o, c in sums.items()]
     )
-    w_off = (
-        Window.partitionBy(*grp) if grp else Window
-    ).orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
+    w_off = Window.partitionBy(*grp).orderBy("__pid").rowsBetween(
+        Window.unboundedPreceding, -1
+    )
     offsets = totals.select(
         *grp,
         "__pid",
         *[
-            F.coalesce(F.sum(f"__ptot_{i}").over(w_off), F.lit(0)).alias(
-                f"__off_{i}"
+            F.coalesce(F.sum(f"__t_{o}").over(w_off), F.lit(0)).alias(
+                f"__o_{o}"
             )
-            for i in range(len(cnt_cols))
+            for o in sums
         ],
     )
     w_loc = Window.partitionBy(*grp, "__pid").orderBy(order_col).rowsBetween(
         Window.unboundedPreceding, -1
     )
-    out = hist
-    for i, c in enumerate(cnt_cols):
-        out = out.withColumn(
-            f"__lcum_{i}", F.coalesce(F.sum(c).over(w_loc), F.lit(0))
-        )
-    out = out.join(F.broadcast(offsets), [*grp, "__pid"])
-    for i, name in enumerate(out_cols):
-        out = out.withColumn(name, F.col(f"__off_{i}") + F.col(f"__lcum_{i}"))
-    return out.drop(
-        "__pid", "__lo", "__hi",
-        *[f"__lcum_{i}" for i in range(len(cnt_cols))],
-        *[f"__off_{i}" for i in range(len(cnt_cols))],
-    )
-
-
-def _hist_exclusive_prefix_grouped(
-    hist: DataFrame,
-    grp_cols: list[str],
-    order_col: str,
-    cnt_col: str,
-    n_partitions: int,
-    out_col: str = "before",
-) -> DataFrame:
-    """Per-group exclusive running sum over a melted value histogram —
-    :func:`_hist_exclusive_prefix` with the prefix resetting on
-    ``grp_cols`` (VERDICT r4 #2: lets one melted ``groupBy(col, v)``
-    scan serve every column's prefix instead of a scan per column).
-    Groups are few (columns / pairs), so the per-group (lo, hi) bounds
-    and the per-(group, bucket) offset frames stay O(groups ×
-    n_buckets) broadcasts; per-bucket local windows keep all row-sized
-    work distributed exactly as in the ungrouped form.
-    """
-    oc = F.col(order_col)
-    bounds = hist.groupBy(*grp_cols).agg(
-        F.min(oc).alias("__lo"), F.max(oc).alias("__hi")
-    )
-    bucket = F.when(
-        F.col("__hi") > F.col("__lo"),
-        F.least(
-            F.floor(
-                (oc - F.col("__lo"))
-                / ((F.col("__hi") - F.col("__lo")) / n_partitions)
-            ),
-            F.lit(n_partitions - 1),
-        ),
-    ).otherwise(F.lit(0))
-    hist = hist.join(F.broadcast(bounds), grp_cols).withColumn(
-        "__bkt", bucket.cast("int")
-    )
-    totals = hist.groupBy(*grp_cols, "__bkt").agg(
-        F.sum(cnt_col).alias("__ptot")
-    )
-    w_off = (
-        Window.partitionBy(*grp_cols)
-        .orderBy("__bkt")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = totals.select(
-        *grp_cols,
-        "__bkt",
-        F.coalesce(F.sum("__ptot").over(w_off), F.lit(0)).alias("__off"),
-    )
-    w_loc = (
-        Window.partitionBy(*grp_cols, "__bkt")
-        .orderBy(order_col)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
     return (
-        hist.withColumn(
-            "__lcum", F.coalesce(F.sum(cnt_col).over(w_loc), F.lit(0))
+        hist.withColumns({
+            f"__l_{o}": F.coalesce(F.sum(c).over(w_loc), F.lit(0))
+            for o, c in sums.items()
+        })
+        .join(F.broadcast(offsets), [*grp, "__pid"])
+        .withColumns(
+            {o: F.col(f"__o_{o}") + F.col(f"__l_{o}") for o in sums}
         )
-        .join(F.broadcast(offsets), [*grp_cols, "__bkt"])
-        .withColumn(out_col, F.col("__off") + F.col("__lcum"))
-        .drop("__bkt", "__lo", "__hi", "__lcum", "__off")
+        .drop(
+            "__pid", "__lo", "__hi",
+            *[f"__{t}_{o}" for t in "ol" for o in sums],
+        )
     )
 
 
@@ -2630,7 +2534,7 @@ def type7_cuts_distributed(
         want[k1] = None
         want[k2] = None
     idx = spark.createDataFrame([(k,) for k in want], "k long")
-    cum = _hist_exclusive_prefix(hist, "v", "cnt", n_parts)
+    cum = _hist_exclusive_prefix(hist, "v", {"before": "cnt"}, n_parts)
     hit = (
         cum.join(
             F.broadcast(idx),
@@ -2692,15 +2596,11 @@ def mann_whitney_u(
         .agg(F.sum("is_a").alias("n_a"), F.count(F.lit(1)).alias("n"))
         .withColumn("n_b", F.col("n") - F.col("n_a"))
     )
-    if _approx_distinct(base, "v") <= max_single_reducer:
-        w_bef = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, -1)
-        hist = hist.withColumn(
-            "before", F.coalesce(F.sum("n").over(w_bef), F.lit(0))
-        )
-    else:
-        spark = df.sparkSession
-        n_parts = n_partitions or spark.sparkContext.defaultParallelism
-        hist = _hist_exclusive_prefix(hist, "v", "n", n_parts)
+    hist = _hist_exclusive_prefix(
+        hist, "v", {"before": "n"},
+        n_partitions or df.sparkSession.sparkContext.defaultParallelism,
+        distributed=_approx_distinct(base, "v") > max_single_reducer,
+    )
     avg_rank = F.col("before") + (F.col("n") + 1) / 2.0
     s = hist.agg(
         F.sum(F.col("n_a") * avg_rank).alias("r_a"),
@@ -3071,9 +2971,9 @@ def gini_coefficient(
     the sum of the old per-column hists, so the melt is a pure scan
     saving — the old form paid one fact scan per column, 8 for
     ``gini_lineitem``). The per-column prefix comes from
-    :func:`_hist_exclusive_prefix_grouped` (bucketed distributed
-    prefix sum resetting per column): no global sort of rows, no
-    single-reducer window over a near-unique column.
+    :func:`_hist_exclusive_prefix` grouped by column (bucketed
+    distributed prefix sum resetting per column): no global sort of
+    rows, no single-reducer window over a near-unique column.
 
     Returns one row per column: ``(column_name, n_rows, gini)`` in the
     order given.
@@ -3094,7 +2994,9 @@ def gini_coefficient(
         # and each lazy traversal would re-scan the fact table
         checkpoint=True,
     )
-    cum = _hist_exclusive_prefix_grouped(melted, ["__pos"], "v", "cnt", n_parts)
+    cum = _hist_exclusive_prefix(
+        melted, "v", {"before": "cnt"}, n_parts, grp_cols=["__pos"]
+    )
     c = F.col("cnt").cast("double")
     b = F.col("before").cast("double")
     s = cum.groupBy("__pos").agg(
@@ -3436,12 +3338,11 @@ def pareto_concentration(
 
     Scale shape: one groupBy(key) rollup, one groupBy(weight) histogram
     (|distinct weights| ≤ |keys|, persisted — it feeds the prefix pass
-    and the totals), ONE bucketed distributed prefix pass carrying both
-    running sums (key count and weight mass; the
-    :func:`_hist_exclusive_prefix` scheme in descending weight order —
-    never a global window), and a broadcast join of the O(|pcts|)
-    threshold frame against the boundary rows. Nothing row-sized ever
-    sits in one task.
+    and the totals), ONE :func:`_hist_exclusive_prefix` pass over
+    ``-w`` carrying both running sums (key count and weight mass, in
+    descending weight order — never a global window), and a broadcast
+    join of the O(|pcts|) threshold frame against the boundary rows.
+    Nothing row-sized ever sits in one task.
 
     Returns ``(pct_keys, n_top_keys, weight_share)``.
     """
@@ -3459,40 +3360,14 @@ def pareto_concentration(
         .agg(F.count(F.lit(1)).alias("cnt"))
         .withColumn("wsum", F.col("w") * F.col("cnt"))
     )
-    # Descending weight order == ascending -w. One fused prefix pass
-    # (the _hist_exclusive_prefix scheme, two running sums per window):
-    # equi-width buckets from a broadcast (lo, hi), per-bucket local
-    # windows, O(n_buckets) offsets.
-    bounds = hist.agg(F.min("w").alias("__lo"), F.max("w").alias("__hi"))
-    bucket = F.when(
-        F.col("__hi") > F.col("__lo"),
-        F.least(
-            F.floor(
-                (F.col("__hi") - F.col("w"))
-                / ((F.col("__hi") - F.col("__lo")) / n_parts)
-            ),
-            F.lit(n_parts - 1),
-        ),
-    ).otherwise(F.lit(0))
-    hb = hist.join(F.broadcast(bounds)).withColumn("__pid", bucket.cast("int"))
-    totals_pp = hb.groupBy("__pid").agg(
-        F.sum("cnt").alias("__ck"), F.sum("wsum").alias("__cw")
-    )
-    w_off = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = totals_pp.select(
-        "__pid",
-        F.coalesce(F.sum("__ck").over(w_off), F.lit(0)).alias("__offk"),
-        F.coalesce(F.sum("__cw").over(w_off), F.lit(0)).alias("__offw"),
-    )
-    w_loc = Window.partitionBy("__pid").orderBy(F.col("w").desc()).rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    cum = (
-        hb.withColumn("__lk", F.coalesce(F.sum("cnt").over(w_loc), F.lit(0)))
-        .withColumn("__lw", F.coalesce(F.sum("wsum").over(w_loc), F.lit(0)))
-        .join(F.broadcast(offsets), "__pid")
-        .withColumn("keys_before", F.col("__offk") + F.col("__lk"))
-        .withColumn("sum_before", F.col("__offw") + F.col("__lw"))
+    # Descending weight order == ascending -w (w is fixed-point long,
+    # so the equi-width buckets over -w are the ones over w, mirrored):
+    # one bucketed prefix pass carries both running sums
+    cum = _hist_exclusive_prefix(
+        hist.withColumn("__negw", -F.col("w")),
+        "__negw",
+        {"keys_before": "cnt", "sum_before": "wsum"},
+        n_parts,
     )
     totals = hist.agg(
         F.sum("cnt").alias("n_keys"), F.sum("wsum").alias("w_total")
@@ -3909,10 +3784,9 @@ def layout_prune_report_multi(
     # a stats+prefix+chunks pipeline per (probe, layout) cell (the
     # per-cell form paid ~20 tiny bounds/offset/aggregate subplans at
     # sf0.1; fixed overhead, not data)
-    cum = _hist_exclusive_prefix_cols(
-        melted, "k", [f"cnt{p}" for p in range(n_probes)], n_parts,
-        out_cols=[f"before{p}" for p in range(n_probes)],
-        grp_cols=["__lid"],
+    cum = _hist_exclusive_prefix(
+        melted, "k", {f"before{p}": f"cnt{p}" for p in range(n_probes)},
+        n_parts, grp_cols=["__lid"],
     )
     # spine keeps the one-row-per-(probe, layout) contract when a
     # layout has no histogram rows for a probe (all-NULL value column):
@@ -4130,8 +4004,8 @@ def km_survival(
     series-sized work; rows collapse once. ADAPTIVE (VERDICT r6 #5):
     fine-grained durations (ms-level at 100 TB) make |distinct t|
     row-scale; past ``max_single_reducer`` approx-distinct durations
-    both cumulations swap to the bucketed distributed prefix sum
-    (:func:`_hist_exclusive_prefix` — the ecdf_lookup machinery):
+    both cumulations swap to two chained bucketed
+    :func:`_hist_exclusive_prefix` passes:
     n_at_risk = total − exclusive-before(n_t), and the ln-chain is a
     second chained prefix over the first's output (each stage eagerly
     pinned — chained lazy prefixes would re-expand the subtree per
@@ -4184,7 +4058,7 @@ def km_survival(
         hist = pin(hist, checkpoint=True)
         total = hist.agg(F.sum("n_t").alias("__tot"))
         pre = pin(
-            _hist_exclusive_prefix(hist, "t", "n_t", n_parts)
+            _hist_exclusive_prefix(hist, "t", {"before": "n_t"}, n_parts)
             .join(F.broadcast(total))
             .withColumn(
                 "n_at_risk", F.col("__tot") - F.col("before")
@@ -4204,7 +4078,7 @@ def km_survival(
         # 0 so the distributed path reproduces the same null-skipping
         # semantics instead of propagating NULL into survival.
         out = _hist_exclusive_prefix(
-            pre, "t", "__lnterm", n_parts, out_col="__lnbefore"
+            pre, "t", {"__lnbefore": "__lnterm"}, n_parts
         ).withColumn(
             "survival",
             F.exp(
@@ -4398,34 +4272,21 @@ def rank_movers(
     )
     order_a = [F.col("n_a").desc(), F.col("key").asc()]
     order_b = [F.col("n_b").desc(), F.col("key").asc()]
-    if max_single_reducer > 0 and (
+    distributed = max_single_reducer <= 0 or (
         _approx_distinct(df.where(F.col(key_col).isNotNull()), key_col)
-        <= max_single_reducer
-    ):
-        wa = Window.orderBy(*order_a)
-        wb = Window.orderBy(*order_b)
-        ranked = (
-            counts.withColumn(
-                "rank_a",
-                F.when(F.col("n_a") > 0, F.row_number().over(wa)),
-            )
-            .withColumn(
-                "rank_b",
-                F.when(F.col("n_b") > 0, F.row_number().over(wb)),
-            )
-        )
-    else:
-        ranked = distributed_row_number(counts, order_a, "__ra")
-        ranked = distributed_row_number(ranked, order_b, "__rb")
-        ranked = (
-            ranked.withColumn(
-                "rank_a", F.when(F.col("n_a") > 0, F.col("__ra"))
-            )
-            .withColumn(
-                "rank_b", F.when(F.col("n_b") > 0, F.col("__rb"))
-            )
-            .drop("__ra", "__rb")
-        )
+        > max_single_reducer
+    )
+    ranked = distributed_row_number(
+        counts, order_a, "__ra", distributed=distributed
+    )
+    ranked = distributed_row_number(
+        ranked, order_b, "__rb", distributed=distributed
+    )
+    ranked = (
+        ranked.withColumn("rank_a", F.when(F.col("n_a") > 0, F.col("__ra")))
+        .withColumn("rank_b", F.when(F.col("n_b") > 0, F.col("__rb")))
+        .drop("__ra", "__rb")
+    )
     return ranked.select(
         "key",
         "n_a",
@@ -4900,15 +4761,11 @@ def kruskal_wallis(
     )
     cells = base.groupBy("v", "g").agg(F.count(F.lit(1)).alias("n_vg"))
     hist = cells.groupBy("v").agg(F.sum("n_vg").alias("n"))
-    if _approx_distinct(base, "v") <= max_single_reducer:
-        w_bef = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, -1)
-        hist = hist.withColumn(
-            "before", F.coalesce(F.sum("n").over(w_bef), F.lit(0))
-        )
-    else:
-        spark = df.sparkSession
-        n_parts = n_partitions or spark.sparkContext.defaultParallelism
-        hist = _hist_exclusive_prefix(hist, "v", "n", n_parts)
+    hist = _hist_exclusive_prefix(
+        hist, "v", {"before": "n"},
+        n_partitions or df.sparkSession.sparkContext.defaultParallelism,
+        distributed=_approx_distinct(base, "v") > max_single_reducer,
+    )
     avg_rank = F.col("before") + (F.col("n") + 1) / 2.0
     ranked = cells.join(hist.select("v", "n", "before"), "v")
     per_group = ranked.groupBy("g").agg(
@@ -5333,15 +5190,13 @@ def conformal_intervals(
         .groupBy("r")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    if _approx_distinct(cal.where(F.col("r").isNotNull()), "r") <= max_single_reducer:
-        w_bef = Window.orderBy("r").rowsBetween(Window.unboundedPreceding, -1)
-        hist = hist.withColumn(
-            "before", F.coalesce(F.sum("n").over(w_bef), F.lit(0))
-        )
-    else:
-        spark = df.sparkSession
-        n_parts = n_partitions or spark.sparkContext.defaultParallelism
-        hist = _hist_exclusive_prefix(hist, "r", "n", n_parts)
+    hist = _hist_exclusive_prefix(
+        hist, "r", {"before": "n"},
+        n_partitions or df.sparkSession.sparkContext.defaultParallelism,
+        distributed=_approx_distinct(
+            cal.where(F.col("r").isNotNull()), "r"
+        ) > max_single_reducer,
+    )
     q_hat = (
         hist.where(F.col("before") + F.col("n") >= k)
         .agg(F.min("r").alias("q"))

@@ -21,8 +21,10 @@ from __future__ import annotations
 # task memory. At or below it, cumulative sums run as a plain ordered
 # window over the |distinct|-row histogram; above it, the bucketed
 # distributed prefix sum (extra shuffle + two broadcasts) takes over.
-# Consumers: profile.ecdf_lookup / type7 quantile cuts / calibration /
-# rank transforms (``max_single_reducer=``).
+# Consumers (``max_single_reducer=``): profile.ecdf_lookup,
+# mann_whitney_u, kruskal_wallis, conformal_intervals and km_survival
+# (the ``distributed=`` switch of _hist_exclusive_prefix), rank_movers
+# and textstats.zipf_fit (the one of distributed_row_number).
 MAX_SINGLE_REDUCER: int = 4_000_000
 
 # A broadcast side of this many rows is ≈ the 10 MB-per-row-ish
@@ -49,8 +51,10 @@ HOT_DIGEST_THRESHOLD: int = 5_000_000
 # ``approx=None`` resolution.
 AUTO_APPROX_ROWS: int = 5_000_000
 
-# Row-count sample cap for the approx-mode distinct-values preview
-# (value frequency top-K under sketch mode samples this many rows).
+# Rows the approx (sketch) profile samples down to before sketching: at
+# 1M values the sampling error on a 1st/99th-percentile rank is ~1e-4 —
+# far inside the sketch accuracy — and the sketch insert cost stops
+# scaling with the corpus. Consumer: profile._auto_approx_source.
 APPROX_SAMPLE_ROWS: int = 1_000_000
 
 # Coarse-quantizer fit: below this many training vectors the seeded
