@@ -9,17 +9,7 @@ from whiterrabbit_spark.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
-    # The test tables are KB-scale. AQE's default starting fan-out
-    # (max(8 x shuffle partitions, 256), sized for 100M-row shuffles)
-    # makes every shuffle schedule 256 near-empty map outputs first: one
-    # pareto_concentration call on 25 rows ran 4721 tasks in 9 s, 257
-    # tasks in 3 s at 8. The fan-out moves task counts, not results.
-    s = get_spark(
-        app_name="wrs-tests",
-        cpus=4,
-        shuffle_partitions=8,
-        extra_conf={"spark.sql.adaptive.coalescePartitions.initialPartitionNum": "8"},
-    )
+    s = get_spark(app_name="wrs-tests", cpus=4)
     yield s
 
 

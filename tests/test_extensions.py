@@ -147,6 +147,27 @@ def test_dedup_persists_registered_and_releasable(spark, monkeypatch):
     assert not persisted_rdd_ids() - before
 
 
+def test_pinned_shuffle_keeps_coalesced_partitions(spark):
+    """A pinned shuffle output is stored with AQE's coalesced partitioning,
+    not the starting fan-out: a cached plan that kept 256 partitions made
+    every read of a 10-row pin a 256-task stage."""
+    key = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, "256")
+    try:
+        counts = pin(
+            spark.range(1000).groupBy((F.col("id") % 10).alias("k")).count(),
+            eager=True,
+        )
+        n = counts.rdd.getNumPartitions()
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
+    assert n <= spark.sparkContext.defaultParallelism, n
+
+
 def test_exact_dedup_counts(spark, docs):
     out = X.exact_duplicates(docs, "text", "doc_id")
     total = out.agg(F.sum("dup_count")).collect()[0][0]

@@ -81,26 +81,14 @@ N_UNIQ_TOKS = 10
 
 
 def _spark(app: str):
-    from pyspark.sql import SparkSession
+    """The shipped session (``get_spark``) at the sweep's size: 64 shuffle
+    partitions (AQE starts at 512) and a 48 GB driver."""
+    from whiterrabbit_spark.session import get_spark
 
-    return (
-        SparkSession.builder.master(
-            f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
-        )
-        .config("spark.sql.shuffle.partitions", "64")
-        .config("spark.driver.memory", "48g")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config(
-            "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-            "512",
-        )
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.extraJavaOptions", "-Duser.timezone=UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .appName(app)
-        .getOrCreate()
+    return get_spark(
+        app_name=app,
+        shuffle_partitions=64,
+        extra_conf={"spark.driver.memory": "48g"},
     )
 
 

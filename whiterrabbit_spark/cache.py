@@ -6,6 +6,10 @@ caller that consumes a result (a CLI ``main``, a benchmark loop, a test)
 opens a scope, around compute plus write; an operator that collects its
 own result may open a nested one. With no scope open a pin is never
 released, as a bare persist.
+
+A pin of a shuffled frame is stored with AQE's coalesced partitioning
+(``session.get_spark`` lets cached plans coalesce), so reading a small
+pin runs a few tasks, not one per starting shuffle partition.
 """
 
 from __future__ import annotations

@@ -28,8 +28,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from whiterrabbit_spark.cache import cache_scope, pin
+from whiterrabbit_spark.session import local_frame
 
 
 def cooccurrence_edges(
@@ -88,7 +90,12 @@ def degree_stats(edges: DataFrame, top_k: int = 10) -> DataFrame:
         )
         # top_k rows: collected before the scope releases its pins
         rows = out.collect()
-        return edges.sparkSession.createDataFrame(rows, out.schema)
+        return local_frame(edges.sparkSession, rows, out.schema)
+
+
+_TRIANGLE_SCHEMA = T.StructType(
+    [T.StructField(c, T.LongType()) for c in ("n_nodes", "n_edges", "n_triangles")]
+)
 
 
 def triangle_count(edges: DataFrame) -> DataFrame:
@@ -170,9 +177,7 @@ def triangle_count(edges: DataFrame) -> DataFrame:
         )
         # one row: collected before the scope releases its pins
         rows = out.collect()
-        return edges.sparkSession.createDataFrame(
-            rows, "n_nodes long, n_edges long, n_triangles long"
-        )
+        return local_frame(edges.sparkSession, rows, _TRIANGLE_SCHEMA)
 
 
 def _pagerank_step(both, nodes, ranks, n_nodes, damping, bcast):
@@ -307,7 +312,7 @@ def pagerank(
         # later identical plan can't be served from this call's cache
         # (the CacheManager matches logical plans across jobs)
         rows = out.collect()
-        return edges.sparkSession.createDataFrame(rows, out.schema)
+        return local_frame(edges.sparkSession, rows, out.schema)
 
 
 def adamic_adar(
@@ -367,4 +372,4 @@ def adamic_adar(
         )
         # top_k rows: collected before the scope releases its pins
         rows = out.collect()
-        return edges.sparkSession.createDataFrame(rows, out.schema)
+        return local_frame(edges.sparkSession, rows, out.schema)

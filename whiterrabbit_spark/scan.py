@@ -179,12 +179,8 @@ def scan_file(
     elif exact and cfg.scan_field_values:
         # the exact profile and the frequency table read the same counts:
         # group them once. A plain persist, so a reader after the scope
-        # closes recomputes it. AQE does not coalesce a cached plan's
-        # shuffle partitions, so coalesce here: one partition per core,
-        # not 256 per column for every reader to scan.
-        histogram = pin(
-            value_histogram(typed).coalesce(spark.sparkContext.defaultParallelism)
-        )
+        # closes recomputes it.
+        histogram = pin(value_histogram(typed))
     summary_all, raw = profile_table(
         typed, cfg, table_name=os.path.basename(path), row_hint=n_rows_checked,
         histogram=histogram,

@@ -5,10 +5,16 @@ cores (not the 200 default), AQE on for runtime coalescing/skew handling,
 UTC session timezone (the reference parses dates tz="UTC",
 whiteRRabbit.R:181), Arrow enabled for the few pandas hops.
 
+Shuffles start wide (``initialPartitionNum``, at least 256) and AQE
+coalesces them down, cached plans included: otherwise every
+``cache.pin`` of a shuffled frame holds 256+ partitions and every read
+of it runs 256+ tasks, however few rows it holds.
+
 ``local_frame`` turns rows already on the driver (a scan's summary and
-overview) into a frame whose plan is a ``LocalRelation``: collecting it
-runs no job, where a ``createDataFrame(list)`` frame is a Python RDD that
-runs a job on Python workers at every read.
+overview, the graph operators' results) into a frame whose plan is a
+``LocalRelation``: collecting it runs no job, where a
+``createDataFrame(list)`` frame is a Python RDD that runs a job on
+Python workers at every read.
 """
 
 from __future__ import annotations
@@ -43,6 +49,12 @@ def get_spark(
             "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
             str(max(shuffle_partitions * 8, 256)),
         )
+        # Cached plans coalesce too. Left false (Spark's default), a
+        # cached plan keeps the fan-out above: a pinned 20-row degree
+        # aggregate was stored as 256 partitions and each read of it ran
+        # 256 tasks. The cost of true: a reader can no longer reuse the
+        # cached plan's hash partitioning, so it may shuffle once more.
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.extraJavaOptions", "-Duser.timezone=UTC")
