@@ -62,13 +62,13 @@ def test_rare_only_column_empty_table(spark):
     assert rows == []
 
 
-def test_wide_table_melt_fallback_matches_branches(spark):
-    """>64 columns triggers the melt plan; results must match the
-    per-column branch plan exactly, for the frequency table and for the
-    profile's distinct counts and quartiles, which read the same
-    histogram. A double column holding 0.0 and -0.0 shows one zero row
-    in both plans."""
-    import whiterrabbit_spark.frequency as freq
+def test_wide_table_frequencies_and_profile(spark):
+    """A 71-column table: the frequency table matches counts taken in
+    Python, and the profile's distinct counts and quartiles, which read
+    the same histogram, are exact. A double column holding 0.0 and -0.0
+    shows one zero row."""
+    from collections import Counter
+
     from whiterrabbit_spark.profile import profile_table
 
     n_cols = 70
@@ -83,42 +83,33 @@ def test_wide_table_melt_fallback_matches_branches(spark):
         rows, ", ".join(f"{c} string" for c in cols) + ", z double"
     )
     cfg = ScanConfig(min_cell_count=5, max_distinct_values=10)
-    wide = value_frequencies(df, cfg=cfg)
-    assert len(cols) > freq._MELT_THRESHOLD
+    out = value_frequencies(df, cfg=cfg).collect()
     assert sorted(
-        (r["value"], r["count"]) for r in wide.where("column_name = 'z'").collect()
+        (r["value"], r["count"]) for r in out if r["column_name"] == "z"
     ) == [("0.0", 30), ("1.0", 10)]
 
-    def key(out):
-        return sorted(
-            (r["column_name"], r["value"], r["count"], round(r["percentage"], 9))
-            for r in out.collect()
-        )
+    expected = []
+    for j, c in enumerate(cols):
+        kept = [
+            (v, n) for v, n in Counter(r[j] for r in rows).items()
+            if n >= cfg.min_cell_count
+        ]
+        total = sum(n for _, n in kept)
+        expected += [(c, v, n, round(n / total, 9)) for v, n in kept]
+    expected += [("z", "0.0", 30, 0.75), ("z", "1.0", 10, 0.25)]
+    assert sorted(
+        (r["column_name"], r["value"], r["count"], round(r["percentage"], 9))
+        for r in out
+    ) == sorted(expected)
 
-    def stats(threshold):
-        # three of the columns: the profile's branch form costs a stage
-        # per column
-        freq._MELT_THRESHOLD = threshold
-        summary, _ = profile_table(df.select("c0", "c1", "z"), cfg)
-        return {
-            r["column_name"]: (r["distinct_count"], r["q1_val"], r["median_val"], r["q3_val"])
-            for r in summary.collect()
-        }
-
-    # force the branch path on the same data for comparison
-    old = freq._MELT_THRESHOLD
-    freq._MELT_THRESHOLD = 1_000
-    try:
-        branches = value_frequencies(df, cfg=cfg)
-        assert key(wide) == key(branches)
-        melt_stats, branch_stats = stats(0), stats(1_000)
-    finally:
-        freq._MELT_THRESHOLD = old
-    assert key(wide), "expected non-empty frequency output"
+    summary, _ = profile_table(df, cfg)
+    stats = {
+        r["column_name"]: (r["distinct_count"], r["q1_val"], r["median_val"], r["q3_val"])
+        for r in summary.collect()
+    }
     # z = 0.0 ×30, 1.0 ×10; the string columns hold v0, v1, v2
-    assert melt_stats == branch_stats == {
-        "c0": (3, None, None, None),
-        "c1": (3, None, None, None),
+    assert stats == {
+        **{c: (3, None, None, None) for c in cols},
         "z": (2, 0.0, 0.0, 0.25),
     }
 

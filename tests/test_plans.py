@@ -20,11 +20,15 @@ from whiterrabbit_spark.queries import build_registry
 QUERIES, _ = build_registry()
 
 
-def _plan(spark, name: str) -> str:
-    df = QUERIES[name](spark, SF_DIR)
+def _explain(df) -> str:
+    jvm = df.sparkSession._jvm
     return df._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+        jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     )
+
+
+def _plan(spark, name: str) -> str:
+    return _explain(QUERIES[name](spark, SF_DIR))
 
 
 def _shuffles(plan: str) -> int:
@@ -57,12 +61,29 @@ def test_document_projections_are_shuffle_free(spark, name):
      ("freq_events_event_type", "event_type")],
 )
 def test_frequency_uses_distributed_topk_and_prunes(spark, name, col):
-    """F1 compiles to TakeOrderedAndProject (per-partition heaps, no global
-    sort) and the scan reads ONLY the profiled column."""
+    """F1's rank window keeps a partial WindowGroupLimit below its
+    exchange (per-partition top-K heaps, no global sort) and the scan
+    reads ONLY the profiled column."""
     plan = _plan(spark, name)
-    assert "TakeOrderedAndProject" in plan
+    assert re.search(r"WindowGroupLimit\n.*\n.*row_number\(\), \d+, Partial", plan)
+    assert "TakeOrderedAndProject" not in plan
     m = re.search(r"ReadSchema: struct<([^>]*)>", plan)
     assert m and m.group(1).split(":")[0] == col, f"scan not pruned: {m}"
+
+
+def test_value_histogram_is_one_shuffle(spark):
+    """Every column's values group in one shuffle: a 48-column frame
+    plans one data Exchange below its aggregate, not one per column. Its
+    columns are 48 distinct projections, over which a row filter spanning
+    every column would not finish optimizing (constraint propagation)."""
+    from pyspark.sql import functions as F
+
+    from whiterrabbit_spark.frequency import value_histogram
+
+    df = spark.range(40).select(
+        *[((F.col("id") + j) % 3).cast("string").alias(f"c{j}") for j in range(48)]
+    )
+    assert _shuffles(_explain(value_histogram(df))) == 1
 
 
 def test_curation_pipeline_single_scan(spark):

@@ -10,7 +10,6 @@ import duckdb
 import pytest
 
 from tests.conftest import SF_DIR
-from whiterrabbit_spark import frequency as freq
 from whiterrabbit_spark.config import ScanConfig
 from whiterrabbit_spark.profile import all_empty_fields, profile_table
 
@@ -81,25 +80,22 @@ def test_string_columns_have_no_numeric_stats(lineitem_summary):
     )[0]
 
 
-def test_empty_vs_missing_and_all_empty(spark, monkeypatch):
+def test_empty_vs_missing_and_all_empty(spark):
     df = spark.createDataFrame(
         [("", None, "x", 0.0), ("", None, "", -0.0), ("", None, None, 1.0)],
         "all_empty string, all_na string, mixed string, zeros double",
     )
-    # both sides of _MELT_THRESHOLD: per-column and melt histograms
-    for threshold in (freq._MELT_THRESHOLD, 0):
-        monkeypatch.setattr(freq, "_MELT_THRESHOLD", threshold)
-        summary, raw = profile_table(df, CFG, table_name="t")
-        rows = {r["column_name"]: r.asDict() for r in summary.collect()}
-        assert rows["all_empty"]["empty_count"] == 3
-        assert rows["all_empty"]["missing_count"] == 0
-        assert rows["all_empty"]["distinct_count"] == 0
-        assert rows["all_na"]["missing_count"] == 3
-        assert rows["mixed"]["non_missing_count"] == 1
-        assert rows["mixed"]["distinct_count"] == 1
-        assert set(all_empty_fields(raw)) == {"all_empty", "all_na"}
-        # one zero, as the reference's R unique() counts it
-        assert rows["zeros"]["distinct_count"] == 2
+    summary, raw = profile_table(df, CFG, table_name="t")
+    rows = {r["column_name"]: r.asDict() for r in summary.collect()}
+    assert rows["all_empty"]["empty_count"] == 3
+    assert rows["all_empty"]["missing_count"] == 0
+    assert rows["all_empty"]["distinct_count"] == 0
+    assert rows["all_na"]["missing_count"] == 3
+    assert rows["mixed"]["non_missing_count"] == 1
+    assert rows["mixed"]["distinct_count"] == 1
+    assert set(all_empty_fields(raw)) == {"all_empty", "all_na"}
+    # one zero, as the reference's R unique() counts it
+    assert rows["zeros"]["distinct_count"] == 2
 
 
 def test_stddev_n1_is_null(spark):

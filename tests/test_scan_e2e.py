@@ -768,6 +768,31 @@ def test_quarantine_multiline_guard_and_sample_sizing(spark, tmp_path):
     assert res.n_rows_checked == 30
 
 
+@pytest.mark.xfail(
+    strict=True,
+    reason="an unsampled quarantined read's frequency table is grouped "
+    "from one-column parses, which skip the CSV field-count check, so it "
+    "counts the quarantined rows; the recorded benchmark report digests "
+    "hold that table, so the fix waits for a benchmark change",
+)
+def test_quarantined_rows_stay_out_of_frequency_table(spark, tmp_path):
+    lines = ["id\tname\tqty"]
+    lines += [f"{i}\tgood\t1" for i in range(20)]
+    lines += [f"{i}\tshort" for i in range(20, 26)]           # too few fields
+    lines += [f"{i}\tlong\t2\textra" for i in range(26, 32)]  # too many
+    p = tmp_path / "ragged.tsv"
+    p.write_text("\n".join(lines) + "\n")
+    res = scan_file(
+        spark, str(p),
+        ScanConfig(quarantine_dir=str(tmp_path / "q"), max_rows=-1),
+    )
+    assert res.n_rows_checked == 20
+    values = {r["value"] for r in res.frequencies.collect()}
+    assert "good" in values
+    # each occurs 6 times, only on quarantined lines
+    assert not values & {"short", "long", "2.0"}
+
+
 def test_explain_cli(spark, capsys):
     import json
 
