@@ -138,3 +138,47 @@ def test_bench_covers_registry():
     assert not dead, f"exclusion rows matching nothing: {dead}"
     for pat, reason in bench.BENCH_EXCLUSIONS:
         assert len(reason) > 20, f"exclusion {pat} needs a real reason"
+
+
+# Python-RDD frames built from driver rows, each with its reason. Every
+# other createDataFrame call goes through session.local_frame.
+CREATE_DATAFRAME_ALLOWED = {
+    ("whiterrabbit_spark/session.py", "local_frame"):
+        "the one LocalRelation constructor (an Arrow table, not a list)",
+    ("whiterrabbit_spark/extensions/dedup.py", "connected_components"):
+        "driver union-find labels: one row per node, up to 2 x "
+        "driver_threshold rows, too many for a LocalRelation",
+}
+
+
+def _create_dataframe_calls(node, fn=None):
+    """(outermost enclosing function, line) of each .createDataFrame call."""
+    import ast
+
+    for child in ast.iter_child_nodes(node):
+        if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            yield from _create_dataframe_calls(child, fn or child.name)
+            continue
+        if (
+            isinstance(child, ast.Call)
+            and isinstance(child.func, ast.Attribute)
+            and child.func.attr == "createDataFrame"
+        ):
+            yield fn, child.lineno
+        yield from _create_dataframe_calls(child, fn)
+
+
+def test_driver_rows_enter_spark_through_local_frame():
+    import ast
+    import glob
+
+    found = set()
+    for path in sorted(glob.glob("whiterrabbit_spark/**/*.py", recursive=True)):
+        tree = ast.parse(open(path).read(), path)
+        for fn, line in _create_dataframe_calls(tree):
+            assert (path, fn) in CREATE_DATAFRAME_ALLOWED, (
+                f"{path}:{line} createDataFrame in {fn}: "
+                "build driver rows with session.local_frame"
+            )
+            found.add((path, fn))
+    assert found == set(CREATE_DATAFRAME_ALLOWED), "stale allowlist entries"

@@ -2,7 +2,10 @@
 
 from __future__ import annotations
 
+import datetime as dt
+
 import pytest
+from pyspark.sql import types as T
 
 from tests.fixture_data import N, write_fixture_folder
 from whiterrabbit_spark.config import ScanConfig
@@ -121,6 +124,62 @@ def test_local_frame_round_trip(spark):
         assert empty.collect() == []
     row = ("File1", "a.tsv", "No description", 2, 1, 1, 0)
     assert local_frame(spark, [row], OVERVIEW_SCHEMA).schema == OVERVIEW_SCHEMA
+
+
+_NAN, _TS = float("nan"), dt.datetime(2024, 2, 29, 23, 59, 59, 123456)
+# (schema, rows) in the shapes of local_frame's call sites
+LOCAL_FRAME_CASES = {
+    "null_in_every_type": (
+        "s string, i int, l long, d double, b boolean, dt date, "
+        "ts timestamp, ntz timestamp_ntz, a array<double>",
+        [
+            ("x", 1, 2, 1.5, True, dt.date(2024, 1, 2), _TS, _TS, [1.0]),
+            (None,) * 9,
+        ],
+    ),
+    "nan_and_negative_zero": (
+        "metric string, value double",
+        [("nan", _NAN), ("neg_zero", -0.0), ("inf", float("inf")), ("null", None)],
+    ),
+    "array_double": (
+        "list_id int, centroid array<double>",
+        [(0, [0.5, -0.0, _NAN, None]), (1, []), (2, None)],
+    ),
+    "non_nullable": (
+        T.StructType(
+            [
+                T.StructField("node", T.LongType(), False),
+                T.StructField("cluster_id", T.LongType(), False),
+            ]
+        ),
+        [(3, 1), (1, 1)],
+    ),
+    "dates_and_timestamps": (
+        "d date, ts timestamp, ntz timestamp_ntz",
+        [
+            (dt.date(1969, 12, 31), dt.datetime(1970, 1, 1), _TS),
+            (dt.date(2024, 1, 30), _TS, dt.datetime(2000, 1, 1, 12)),
+        ],
+    ),
+    "zero_rows": ("bucket int, bucket_lo double, bucket_hi double, n_rows long", []),
+    "ddl_string": (
+        "name string, column string, kind string, observed double, passed boolean",
+        [("c0", "x", "min_ge", 0.0, True), ("c1", "y", "not_null", None, False)],
+    ),
+}
+
+
+@pytest.mark.parametrize("case", list(LOCAL_FRAME_CASES))
+def test_local_frame_matches_create_dataframe(spark, case):
+    # local_frame is the package's one way to turn driver rows into a
+    # frame; it must read back exactly as the Python-RDD frame did.
+    from whiterrabbit_spark.session import local_frame
+
+    schema, rows = LOCAL_FRAME_CASES[case]
+    got = local_frame(spark, rows, schema)
+    want = spark.createDataFrame(rows, schema)
+    assert got.schema == want.schema  # nullability included
+    assert repr(got.collect()) == repr(want.collect())  # NaN, -0.0 kept
 
 
 def test_summary_and_overview_are_local_relations(spark, workdir):

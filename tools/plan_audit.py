@@ -2,8 +2,9 @@
 """Mechanical physical-plan audit of every registry query.
 
 Emits one JSON line per query: parquet scan count, Exchange count (data
-shuffles), broadcast count, and the load-bearing node names (WindowGroupLimit,
-TakeOrderedAndProject, SortMergeJoin, mapInPandas, ...). This regenerates the
+shuffles), broadcast count, LogicalRDD scan count, and the load-bearing node
+names (WindowGroupLimit, TakeOrderedAndProject, SortMergeJoin, mapInPandas,
+CartesianProduct, LocalTableScan, ...). This regenerates the
 evidence behind PLANS.md instead of hand-counting — run after any operator
 change and diff the output.
 
@@ -60,7 +61,8 @@ def audit_plan(plan: str) -> dict:
                 "WindowGroupLimit", "TakeOrderedAndProject", "SortMergeJoin",
                 "BroadcastHashJoin", "ShuffledHashJoin", "BroadcastNestedLoopJoin",
                 "Window", "Generate", "Expand", "MapInPandas", "FlatMapGroupsInPandas",
-                "ObjectHashAggregate", "SortAggregate",
+                "ObjectHashAggregate", "SortAggregate", "CartesianProduct",
+                "LocalTableScan",
             }
         }
     )
@@ -68,6 +70,9 @@ def audit_plan(plan: str) -> dict:
         "parquet_scans": n(r"\(\d+\) (?:Batch)?Scan parquet"),
         "exchanges": n(r"\(\d+\) Exchange"),
         "broadcasts": n(r"\(\d+\) BroadcastExchange"),
+        # LogicalRDD scans: createDataFrame(list) frames and local
+        # checkpoints (a LocalRelation prints as LocalTableScan)
+        "rdd_scans": n(r"\(\d+\) Scan ExistingRDD"),
         "key_nodes": nodes,
         # v1 scans print PushedFilters, DSv2 BatchScans print DataFilters
         # — either non-empty means the predicate reached the reader

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from whiterrabbit_spark.cache import cache_scope
 from whiterrabbit_spark.config import ScanConfig
 from whiterrabbit_spark.scan import scan_folder
+from whiterrabbit_spark.session import get_spark, local_frame
 
 # (stat column, emit delta?) — deltas only where subtraction is meaningful
 _STATS: tuple[tuple[str, bool], ...] = (
@@ -171,15 +172,13 @@ def run_drift(
         ("__only_new__", sorted(set(new_by) - set(old_by))),
     ):
         if names:
-            out[tag] = spark.createDataFrame(
-                [(n,) for n in names], "file_name string"
+            out[tag] = local_frame(
+                spark, [(n,) for n in names], "file_name string"
             )
     return out
 
 
 def main(argv: list[str] | None = None) -> int:
-    from whiterrabbit_spark.session import get_spark
-
     args = build_parser().parse_args(argv)
     for d in (args.old, args.new):
         if not os.path.isdir(d):

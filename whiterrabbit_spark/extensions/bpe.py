@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from whiterrabbit_spark.cache import pin
+from whiterrabbit_spark.session import local_frame
 
 #: End-of-word marker (Sennrich's </w>): keeps "low" in "lowest" from
 #: merging across word boundaries. Corpora that legitimately contain
@@ -113,7 +114,7 @@ def learn_bpe_merges(
                 break
             merges.append((rank, a, b, n))
             vocab = [(_merge_word(s, a, b), c) for s, c in vocab]
-        return spark.createDataFrame(merges, schema)
+        return local_frame(spark, merges, schema)
 
     # distributed path: vocab as (symbols array, count) frame
     import pandas as pd
@@ -160,7 +161,7 @@ def learn_bpe_merges(
         cur = pin(cur.mapInPandas(
             apply_merge, "syms array<string>, count long"
         ), checkpoint=True, eager=False)
-    return spark.createDataFrame(merges, schema)
+    return local_frame(spark, merges, schema)
 
 
 def segment_bpe(

@@ -1111,6 +1111,7 @@ def connected_components(
                 T.StructField("cluster_id", src_t, False),
             ]
         )
+        # stays a Python RDD: one row per node, up to 2 x driver_threshold
         return edges.sparkSession.createDataFrame(out, schema)
 
     def _large_star(e: DataFrame) -> DataFrame:

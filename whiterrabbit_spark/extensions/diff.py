@@ -28,6 +28,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from whiterrabbit_spark.session import local_frame
+
 
 def table_diff_summary(
     old: DataFrame,
@@ -146,7 +148,8 @@ def scd2_history(
         .distinct()
         .collect()
     )
-    cal = snapshots.sparkSession.createDataFrame(
+    cal = local_frame(
+        snapshots.sparkSession,
         [
             (d, dates[i - 1] if i > 0 else None,
              dates[i + 1] if i + 1 < len(dates) else None)

@@ -23,6 +23,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from whiterrabbit_spark.cache import pin
+from whiterrabbit_spark.session import local_frame
 
 
 def funnel_completion_times(
@@ -149,8 +150,8 @@ def funnel_report(
         prev = counts[i - 1] if i else None
         rate = (counts[i] / prev) if prev else (1.0 if i == 0 else None)
         data.append((i + 1, s, counts[i], rate))
-    return events.sparkSession.createDataFrame(
-        data,
+    return local_frame(
+        events.sparkSession, data,
         "step int, step_name string, n_users long, conversion_from_prev double",
     )
 

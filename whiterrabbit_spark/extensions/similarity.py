@@ -41,6 +41,7 @@ from whiterrabbit_spark.scale import (
     LSH_FETCH_JOIN_MAX_BYTES,
     QUANTIZER_TRAIN_PER_LIST,
 )
+from whiterrabbit_spark.session import local_frame
 
 
 def _to_double(arr: Column) -> Column:
@@ -248,7 +249,7 @@ def cosine_topk_blocked(
     qrows = queries.select(query_id_col, vec_col).collect()
     out_schema = "query_id long, neighbor_id long, cosine double, rank int"
     if not qrows:
-        return corpus.sparkSession.createDataFrame([], out_schema)
+        return local_frame(corpus.sparkSession, [], out_schema)
     qids = np.array([r[0] for r in qrows], dtype=np.int64)
     qm = np.stack([np.asarray(r[1], dtype=np.float64) for r in qrows])
     qm = qm / np.linalg.norm(qm, axis=1, keepdims=True)
@@ -319,8 +320,8 @@ def cosine_near_pairs_blocked(
         # ranges) still spread evenly across blocks
         F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks)).cast("int").alias("blk"),
     )
-    pair_keys = spark.createDataFrame(
-        [(i, j) for i in range(n_blocks) for j in range(i, n_blocks)],
+    pair_keys = local_frame(
+        spark, [(i, j) for i in range(n_blocks) for j in range(i, n_blocks)],
         "bi int, bj int",
     )
     left = tagged.join(F.broadcast(pair_keys), F.col("blk") == F.col("bi")).select(
@@ -1016,13 +1017,11 @@ def ivf_build_index(
         corpus, vec_col, n_lists, seed, sample_fraction=sample_fraction
     )
     spark = corpus.sparkSession
-    cdf = spark.createDataFrame(
+    cdf = local_frame(
+        spark,
         [(i, c) for i, c in enumerate(centers)], "list_id int, centroid array<double>"
     )
-    # repartition(1), not coalesce(1): a coalesced task drains the
-    # driver-parallelized slices serially (~5 s for 16 rows at
-    # local[32], measured); the one-round shuffle is ~0.7 s
-    cdf.repartition(1).write.mode("overwrite").parquet(f"{out_dir}/centroids")
+    cdf.write.mode("overwrite").parquet(f"{out_dir}/centroids")
     assigned = corpus.select(
         F.col(id_col).alias("id"),
         _to_double(F.col(vec_col)).alias("v"),
@@ -1268,8 +1267,8 @@ def ivf_tuning_curve(
     )
     n_q = queries.select(F.countDistinct(query_id_col).alias("nq"))
     spark = corpus.sparkSession
-    probe_frame = spark.createDataFrame(
-        [(int(p),) for p in probes_sorted], "n_probe long"
+    probe_frame = local_frame(
+        spark, [(int(p),) for p in probes_sorted], "n_probe long"
     )
     n_hits = F.lit(None).cast("long")
     for p in probes_sorted:
@@ -1486,8 +1485,8 @@ def embedding_pca(
         "gram array<double>, sums array<double>, n long, d int",
     ).collect()
     if not parts:
-        return spark.createDataFrame(
-            [],
+        return local_frame(
+            spark, [],
             "component int, eigenvalue double, variance_explained double,"
             " cumulative_explained double",
         )
@@ -1506,8 +1505,8 @@ def embedding_pca(
          float(cum[i]))
         for i in range(len(top))
     ]
-    return spark.createDataFrame(
-        rows,
+    return local_frame(
+        spark, rows,
         "component int, eigenvalue double, variance_explained double,"
         " cumulative_explained double",
     )
@@ -1746,8 +1745,8 @@ def _dense_token_dots(
 
     spark = kept.sparkSession
     idx = F.broadcast(
-        spark.createDataFrame(
-            [(t, i) for i, t in enumerate(vocab)], "tok string, vidx int"
+        local_frame(
+            spark, [(t, i) for i, t in enumerate(vocab)], "tok string, vidx int"
         )
     )
     v_len = len(vocab)
@@ -1773,8 +1772,8 @@ def _dense_token_dots(
         "v",
         F.pmod(F.xxhash64(F.col("id")), F.lit(n_blocks)).cast("int").alias("blk"),
     )
-    pair_keys = spark.createDataFrame(
-        [(i, j) for i in range(n_blocks) for j in range(i, n_blocks)],
+    pair_keys = local_frame(
+        spark, [(i, j) for i in range(n_blocks) for j in range(i, n_blocks)],
         "bi int, bj int",
     )
     left = tagged.join(F.broadcast(pair_keys), F.col("blk") == F.col("bi")).select(

@@ -23,8 +23,10 @@ branches 5.60 s, melt 5.03 s; 40 rows x 48 columns, 8.80 s and
 ``WindowGroupLimit`` below its exchange (per-partition top-K, no global
 sort) while ``max_distinct_values`` is at most
 ``spark.sql.optimizer.windowGroupLimitThreshold`` (both 1000 by
-default). The displayed-denominator percentage runs on
-≤ columns×maxDistinct rows.
+default). The rank window's reduce side, the displayed-denominator
+percentage and the final sort run in one task: with the partial limit
+it reads at most K rows per column from each map partition, and it
+needs no range exchange (nor its sampling job) for the sort.
 """
 
 from __future__ import annotations
@@ -154,12 +156,16 @@ def value_frequencies(
         .drop("__rn")
     )
 
+    # One sorted partition, not orderBy's range exchange (which samples
+    # in a job of its own): the partial WindowGroupLimit below the rank
+    # window's exchange already cut each map partition to K per column.
     w_all = Window.partitionBy("column_name")
     return (
         retained.withColumn(
             "percentage", F.col("count") / F.sum("count").over(w_all)
         )
-        .orderBy("column_name", *order)
+        .coalesce(1)
+        .sortWithinPartitions("column_name", *order)
     )
 
 
@@ -216,7 +222,7 @@ def approx_heavy_hitters(
     total = df.count()
     cands = df.stat.freqItems([column], support).collect()[0][0]
     if not cands:
-        return df.sparkSession.createDataFrame([], "value string, count long")
+        return local_frame(df.sparkSession, [], "value string, count long")
     exact = (
         df.where(F.col(column).isin(list(cands)))
         .groupBy(F.col(column).cast("string").alias("value"))
@@ -252,8 +258,8 @@ def grouped_value_frequencies(
             if f.name != group_col and eligible(f.dataType)
         ]
     if not columns:
-        return df.sparkSession.createDataFrame(
-            [],
+        return local_frame(
+            df.sparkSession, [],
             f"{group_col} string, column_name string, value string, "
             "count long, percentage double",
         )

@@ -27,6 +27,8 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from whiterrabbit_spark.session import local_frame
+
 
 class NoInputFilesError(ValueError):
     """No files matching the delimiter pattern (reference W:120-122)."""
@@ -344,8 +346,8 @@ def parquet_schema_report(
                 (os.path.relpath(f, folder), field.name,
                  field.dataType.simpleString())
             )
-    report = spark.createDataFrame(
-        rows, "file_name string, column_name string, data_type string"
+    report = local_frame(
+        spark, rows, "file_name string, column_name string, data_type string"
     )
     w = Window.partitionBy("column_name")
     return report.select(

@@ -386,8 +386,8 @@ def equi_width_histogram(
     lo, hi = row["lo"], row["hi"]
     spark = df.sparkSession
     if lo is None:
-        return spark.createDataFrame(
-            [], "bucket int, bucket_lo double, bucket_hi double, n_rows long"
+        return local_frame(
+            spark, [], "bucket int, bucket_lo double, bucket_hi double, n_rows long"
         )
     width = (hi - lo) / bins if hi > lo else 1.0
     bucket = F.least(
@@ -453,8 +453,8 @@ def iqr_outlier_counts(df: DataFrame, cols: list[str], k: float = 1.5) -> DataFr
         )
         for c in cols
     ]
-    return df.sparkSession.createDataFrame(
-        out,
+    return local_frame(
+        df.sparkSession, out,
         "column_name string, fence_lo double, fence_hi double, "
         "n_below long, n_above long, n_rows long",
     )
@@ -471,8 +471,8 @@ def corr_matrix(df: DataFrame, cols: list[str]) -> DataFrame:
         for a, b in pairs
     ]
     row = df.agg(*aggs).collect()[0].asDict()
-    return df.sparkSession.createDataFrame(
-        [(a, b, row[f"{a}__{b}"]) for a, b in pairs],
+    return local_frame(
+        df.sparkSession, [(a, b, row[f"{a}__{b}"]) for a, b in pairs],
         "col_a string, col_b string, corr double",
     )
 
@@ -520,8 +520,8 @@ def profile_drift(
                 a[f"{c}__sd"], b[f"{c}__sd"],
             )
         )
-    return df_a.sparkSession.createDataFrame(
-        rows,
+    return local_frame(
+        df_a.sparkSession, rows,
         "column_name string, missing_rate_a double, missing_rate_b double, "
         "missing_rate_delta double, mean_a double, mean_b double, "
         "mean_delta double, sd_a double, sd_b double",
@@ -951,8 +951,8 @@ def _binned_joint_counts(
                 )
             )
         if not entries:
-            return ref.sparkSession.createDataFrame(
-                [], f"column_name string, bucket int, {side} long"
+            return local_frame(
+                ref.sparkSession, [], f"column_name string, bucket int, {side} long"
             )
         melted = df.select(
             F.explode(F.array(*entries)).alias("e")
@@ -1268,7 +1268,8 @@ def fk_coverage(
     n_child, n_parent = r["n_child"], r["n_parent"]
     orphans, unref = r["n_child_orphans"], r["n_parent_unreferenced"]
     spark = child.sparkSession
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 n_child,
@@ -1385,8 +1386,8 @@ def mad_outlier_counts(
         )
         for c in cols
     ]
-    return spark.createDataFrame(
-        rows, "column string, median_val double, mad double, n_outliers long"
+    return local_frame(
+        spark, rows, "column string, median_val double, mad double, n_outliers long"
     )
 
 
@@ -1453,7 +1454,7 @@ def check_constraints(
         "passed boolean"
     )
     if not exprs:
-        return df.sparkSession.createDataFrame([], verdict_schema)
+        return local_frame(df.sparkSession, [], verdict_schema)
     row = df.agg(*exprs).first()
 
     verdicts = []
@@ -1477,7 +1478,7 @@ def check_constraints(
                 bool(passed),
             )
         )
-    return df.sparkSession.createDataFrame(verdicts, verdict_schema)
+    return local_frame(df.sparkSession, verdicts, verdict_schema)
 
 
 def equi_depth_histogram(
@@ -1527,8 +1528,8 @@ def equi_depth_histogram(
         ).collect()[0]
         spark = df.sparkSession
         if row["lo"] is None:
-            return spark.createDataFrame(
-                [], "bucket int, bucket_lo double, bucket_hi double, n_rows long"
+            return local_frame(
+                spark, [], "bucket int, bucket_lo double, bucket_hi double, n_rows long"
             )
         cuts = [float(x) for x in row["q"]]
         # in the sampled regime lo/hi are the SAMPLE extremes — edge
@@ -1565,8 +1566,8 @@ def equi_depth_histogram(
         ).collect()[0]
         spark = df.sparkSession
         if row["lo"] is None:
-            return spark.createDataFrame(
-                [], "bucket int, bucket_lo double, bucket_hi double, n_rows long"
+            return local_frame(
+                spark, [], "bucket int, bucket_lo double, bucket_hi double, n_rows long"
             )
         # distributed type-7 cuts: no single-task weighted-percentile
         # buffer, no distinct-multiset partial states (the r3 plan swap
@@ -1594,8 +1595,8 @@ def equi_depth_histogram(
         # materialize inside the scope so the returned frame doesn't
         # recompute the histogram scan lazily after the pin is gone
         rows = out.collect()
-        return spark.createDataFrame(
-            rows, "bucket int, bucket_lo double, bucket_hi double, n_rows long"
+        return local_frame(
+            spark, rows, "bucket int, bucket_lo double, bucket_hi double, n_rows long"
         )
 
 
@@ -1807,7 +1808,7 @@ def key_skew_report(df: DataFrame, key_col: str, top_k: int = 10) -> DataFrame:
         ("top1_share", (top[0] / n_rows) if top and n_rows else None),
         (f"top{top_k}_share", (sum(top) / n_rows) if top and n_rows else None),
     ]
-    return df.sparkSession.createDataFrame(out, "metric string, value double")
+    return local_frame(df.sparkSession, out, "metric string, value double")
 
 
 def ks_drift(
@@ -2167,7 +2168,7 @@ def sequence_gaps(
     schema = ("min_key bigint, max_key bigint, n_keys bigint, "
               "n_missing bigint, n_gaps bigint, max_gap bigint")
     if row["lo"] is None:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     lo, hi = int(row["lo"]), int(row["hi"])
     span = hi - lo + 1
     # divide-first bucketing: the multiply-first form ((k-lo)*n_buckets)
@@ -2236,7 +2237,7 @@ def hist2d(
     schema = ("bucket_x int, bucket_y int, x_lo double, x_hi double, "
               "y_lo double, y_hi double, n_rows long")
     if row["lx"] is None:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     lx, hx, ly, hy = (float(row[k]) for k in ("lx", "hx", "ly", "hy"))
     wx = (hx - lx) / bins_x if hx > lx else 1.0
     wy = (hy - ly) / bins_y if hy > ly else 1.0
@@ -2533,7 +2534,7 @@ def type7_cuts_distributed(
         pos.append((h, k1, k2))
         want[k1] = None
         want[k2] = None
-    idx = spark.createDataFrame([(k,) for k in want], "k long")
+    idx = local_frame(spark, [(k,) for k in want], "k long")
     cum = _hist_exclusive_prefix(hist, "v", {"before": "cnt"}, n_parts)
     hit = (
         cum.join(
@@ -3372,8 +3373,8 @@ def pareto_concentration(
     totals = hist.agg(
         F.sum("cnt").alias("n_keys"), F.sum("wsum").alias("w_total")
     )
-    cuts = spark.createDataFrame(
-        [(float(p),) for p in pcts], "pct_keys double"
+    cuts = local_frame(
+        spark, [(float(p),) for p in pcts], "pct_keys double"
     )
     k = F.ceil(F.col("pct_keys") / 100.0 * F.col("n_keys")).cast("long")
     boundary = (
@@ -5517,7 +5518,7 @@ def approx_quantile_gate(
     schema = "q double, n_rows long, exact_value double, within_bound long"
     if not n:
         # no rows -> nothing to gate; empty frame keeps the contract
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     # duplicates give the returned element a rank INTERVAL
     # [count(<a)+1, count(<=a)]; the sketch contract holds if that
     # interval intersects [q·n − n/acc, q·n + n/acc]
@@ -5544,7 +5545,7 @@ def approx_quantile_gate(
         target = q * float(n)
         ok = (lo <= target + tol) and (hi >= target - tol)
         rows.append((float(q), int(n), float(e), int(ok)))
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 def grouped_weighted_median(
@@ -5701,8 +5702,8 @@ def hurst_rescaled_range(
         (F.row_number().over(idx_w) - 1).alias("i"),
         F.col("x").cast("double").alias("x"),
     )
-    sizes = df.sparkSession.createDataFrame(
-        [(int(n),) for n in block_sizes], "n long"
+    sizes = local_frame(
+        df.sparkSession, [(int(n),) for n in block_sizes], "n long"
     )
     total = series.agg(F.count(F.lit(1)).alias("series_len"))
     e = (

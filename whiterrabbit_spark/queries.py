@@ -29,6 +29,7 @@ from whiterrabbit_spark.frequency import value_frequencies
 from whiterrabbit_spark.infer import infer_types
 from whiterrabbit_spark.io import read_parquet_table
 from whiterrabbit_spark.profile import profile_table
+from whiterrabbit_spark.session import local_frame
 
 CFG = ScanConfig(max_rows=-1)
 R = 6  # rounding digits for double stats
@@ -233,8 +234,8 @@ def _overview(spark: SparkSession, sf_dir: str) -> DataFrame:
     for t in sorted(TABLE_COLUMNS):
         df = read_parquet_table(spark, sf_dir, t)
         rows.append((t, df.count(), len(df.columns)))
-    return spark.createDataFrame(
-        rows, "table_name string, n_rows long, n_fields long"
+    return local_frame(
+        spark, rows, "table_name string, n_rows long, n_fields long"
     )
 
 
@@ -254,8 +255,8 @@ def _infer(table: str) -> Callable:
             *[F.col(c).cast("string").alias(c) for c in df.columns]
         )
         res = infer_types(stringified, CFG)
-        return spark.createDataFrame(
-            sorted(res.decisions.items()),
+        return local_frame(
+            spark, sorted(res.decisions.items()),
             "column_name string, inferred_type string",
         )
 
@@ -2341,7 +2342,8 @@ def _corpus_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     dup_rate = (
         round(1 - row["n_unique"] / row["n_docs"], R) if row["n_docs"] else 0.0
     )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(row["n_docs"], row["total_chars"], row["total_bpe_tokens"],
           row["n_langs"], row["n_keep"], row["n_review"], row["n_drop"],
           row["n_unique"], dup_rate)],
@@ -6838,9 +6840,11 @@ ORDER BY days.d"""
 
 def _km_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kaplan–Meier user-lifetime curve WITH right-censoring
-    (profile.km_survival): users whose last event sits within 3 days of
-    the corpus edge are censored (still at risk), not churned — the
-    correction lifetime_survival can't make."""
+    (profile.km_survival): users whose last event sits within 12 hours
+    of the corpus edge are censored (still at risk), not churned — the
+    correction lifetime_survival can't make. The events span 30 days and
+    every user's last event falls within 3 days of the edge, so a wider
+    margin censors every user and returns no rows."""
     from whiterrabbit_spark.profile import km_survival
 
     ev = read_parquet_table(spark, sf_dir, "events")
@@ -6857,7 +6861,7 @@ def _km_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("duration"),
         (
             F.unix_timestamp("edge") - F.unix_timestamp("last_ts")
-            > 3 * 86400
+            > 12 * 3600
         ).alias("churned"),
     )
     return km_survival(base, "duration", "churned")
@@ -6872,7 +6876,7 @@ WITH spans AS (
 base AS (
   SELECT CAST(floor((epoch(last_ts) - epoch(first_ts)) / 86400.0)
               AS BIGINT) AS t,
-         (epoch(e) - epoch(last_ts)) > 3 * 86400 AS churned
+         (epoch(e) - epoch(last_ts)) > 12 * 3600 AS churned
   FROM spans, edge
 ), hist AS (
   SELECT t, CAST(count(*) AS BIGINT) AS n_t,
@@ -10913,8 +10917,8 @@ def _embedding_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
                 n,
             )
         )
-    return spark.createDataFrame(
-        rows,
+    return local_frame(
+        spark, rows,
         "component int, sorted_nonneg boolean, cum_in_bounds boolean,"
         " total_variance double, lambda_max_in_bounds boolean, n long",
     )

@@ -132,11 +132,9 @@ def write_parquet_report(
 
     def sink(df: DataFrame, name: str) -> None:
         p = os.path.join(output_dir, f"{prefix}_{name}")
-        # repartition(1), NOT coalesce(1): these frames sit on
-        # driver-parallelized partitions (defaultParallelism slices), and
-        # a coalesced single task drains all parents SERIALLY — measured
-        # ~0.15 s per slice = ~5 s per tiny write at local[32]. The
-        # one-round shuffle runs the parents in parallel first (~0.7 s).
+        # repartition(1), NOT coalesce(1): a coalesced single task runs
+        # the last stage of every unioned table SERIALLY; the one-round
+        # shuffle runs them in parallel first.
         # sortWithinPartitions: the single reducer fetches map outputs
         # in nondeterministic order, so without it persisted row order
         # varies run-to-run and any downstream file-level diff breaks.

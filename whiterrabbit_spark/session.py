@@ -10,11 +10,17 @@ coalesces them down, cached plans included: otherwise every
 ``cache.pin`` of a shuffled frame holds 256+ partitions and every read
 of it runs 256+ tasks, however few rows it holds.
 
-``local_frame`` turns rows already on the driver (a scan's summary and
-overview, the graph operators' results) into a frame whose plan is a
-``LocalRelation``: collecting it runs no job, where a
-``createDataFrame(list)`` frame is a Python RDD that runs a job on
-Python workers at every read.
+Rule: rows built on the driver enter Spark only through
+``local_frame`` (a scan's summary and overview, the operators' small
+result tables, lookup and key frames, empty results). Its plan is a
+``LocalRelation``: collecting it runs no job, and a join reads it
+without a Python worker, where a ``createDataFrame(list)`` frame is a
+Python RDD whose every read waits on one. The one exception is a row
+count bounded by the data rather than by a constant: the driver
+union-find labels of ``dedup.connected_components`` (one row per node,
+up to twice ``driver_threshold``) stay a Python RDD, so the labels are
+not held in the plan. ``tests/test_docs_sync.py`` enforces the rule
+and lists the exception.
 """
 
 from __future__ import annotations
@@ -93,19 +99,30 @@ def get_spark(
 
 
 def local_frame(
-    spark: SparkSession, rows: list[tuple], schema: T.StructType
+    spark: SparkSession, rows: list[tuple], schema: T.StructType | str
 ) -> DataFrame:
-    """``rows`` as a ``LocalRelation`` frame with exactly ``schema``.
+    """``rows`` as a ``LocalRelation`` frame with exactly ``schema`` (a
+    ``StructType`` or a DDL string such as ``"k long, v double"``).
 
     Built through a ``pyarrow.Table`` typed from the Spark schema, so
     non-nullable fields stay non-nullable and a float NaN stays NaN, apart
-    from None (NULL). ``collect()`` on the frame runs no Spark job.
+    from None (NULL). A naive ``datetime`` in a ``timestamp`` field is
+    local time, as in ``createDataFrame``. ``collect()`` on the frame runs
+    no Spark job.
     """
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
     arrow_schema = to_arrow_schema(schema)
     columns = list(zip(*rows)) if rows else [()] * len(schema.fields)
+    columns = [
+        [None if v is None else v.astimezone() for v in c]
+        if isinstance(f.dataType, T.TimestampType)
+        else c
+        for c, f in zip(columns, schema.fields)
+    ]
     table = pa.Table.from_arrays(
         [pa.array(list(c), type=f.type) for c, f in zip(columns, arrow_schema)],
         schema=arrow_schema,
